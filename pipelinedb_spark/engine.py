@@ -142,6 +142,24 @@ def grouped_agg(df: DataFrame, key_cols: list, key_names: list[str],
                          *[F.col(f"b.{c}") for c in b_vals])
 
 
+def _observe_count(df: DataFrame) -> tuple[DataFrame, Any]:
+    """Attach a row-count Observation to ``df``: the count rides the
+    first job that materializes the frame, so counting costs no job of
+    its own.  Read it with ``_observed_count`` after that job ran."""
+    from pyspark.sql import Observation
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
+
+
+def _observed_count(obs: Any) -> int:
+    """The row count an ``_observe_count`` Observation saw.  When Spark
+    proves the observed input empty it prunes the observed node (e.g.
+    below a grouped aggregate) and completes the Observation with a
+    zero-length row; that reads as 0."""
+    row = obs._jo.getRow()
+    return int(row.get(0)) if row.length() else 0
+
+
 @dataclass
 class StreamDef:
     name: str
@@ -494,8 +512,7 @@ class ContView:
         txns: dict[str, int] = {}
         for df, t in batches:
             if t is not None:
-                done = self.matrel.txn_version(t[0])
-                if done is not None and t[1] <= done:
+                if self.replayed(t):
                     continue
                 txns[t[0]] = max(txns.get(t[0], -1), t[1])
             keep.append(df)
@@ -506,6 +523,16 @@ class ContView:
             unioned = unioned.unionByName(b, allowMissingColumns=True)
         return self.process_batch(unioned, emit_changes=emit_changes,
                                   txn=txns or None)
+
+    def replayed(self, txn: tuple[str, int] | dict | None) -> bool:
+        """Has every ``(source app id, version)`` in ``txn`` already
+        committed to this view's matrel?  ``txn`` is one pair or an
+        {app_id: version} dict; None is never a replay."""
+        if isinstance(txn, tuple):
+            txn = {txn[0]: txn[1]}
+        return bool(txn) and all(
+            (done := self.matrel.txn_version(a)) is not None and v <= done
+            for a, v in txn.items())
 
     def process_batch(self, pre_df: DataFrame,
                       emit_changes: bool = True,
@@ -525,17 +552,7 @@ class ContView:
         stores).  The skip check re-runs under commit_lock right
         before the merge: the cheap pre-check alone was a TOCTOU —
         two threads carrying the same epoch could both pass it."""
-        if isinstance(txn, tuple):
-            txn = {txn[0]: txn[1]}
-
-        def _already_committed() -> bool:
-            if not txn:
-                return False
-            return all(
-                (done := self.matrel.txn_version(a)) is not None
-                and v <= done for a, v in txn.items())
-
-        if _already_committed():
+        if self.replayed(txn):
             return None  # replayed source batch — already merged
         # bucket before the checkpoint, and piggyback the affected-
         # bucket probe on the checkpoint job itself (Observation): one
@@ -552,8 +569,7 @@ class ContView:
             # materialization — no extra job — and skip the commit
             # when nothing arrived (the pre-r15 n==0 early return,
             # without the count job the fast path removed).
-            in_obs = Observation()
-            pre_df = pre_df.observe(in_obs, F.count(F.lit(1)).alias("n"))
+            pre_df, in_obs = _observe_count(pre_df)
         obs = Observation()
         obs_cols = [F.collect_set(F.col(BUCKET_COL)).alias("bks")]
         if self._arrival_log:
@@ -568,10 +584,10 @@ class ContView:
             self._next_seq = int(obs.get["mx_seq"])
         if not affected:
             return None
-        if in_obs is not None and int(in_obs.get["n"]) == 0:
+        if in_obs is not None and _observed_count(in_obs) == 0:
             return None  # empty batch into a global aggregate
         with self.commit_lock:
-            if _already_committed():
+            if self.replayed(txn):
                 return None  # lost the race: another thread merged it
             old, merged = self.matrel.merge(
                 delta, self._group_cols, self.merge_fn, affected=affected,
@@ -1776,72 +1792,95 @@ class PipelineContext:
         Reference data path: src/stream_fdw.c:477-585 →
         microbatch_send_to_worker → worker → combiner.
         ``targets`` restricts which CQs consume this insert (the
-        stream_targets GUC, reference src/config.c:349-355)."""
+        stream_targets GUC, reference src/config.c:349-355).
+
+        Row lists and DataFrames, like Structured Streaming epochs and
+        change-feed hops, enter through one rule (``_ingest``): the
+        input is checkpointed only when several consumers read it or
+        commits are deferred; the row count is ``len(rows)`` for a
+        list, else an Observation on the first job that materializes
+        the batch; an empty batch returns 0 before dispatch whenever
+        its count is known first.  Returns the row count, which the
+        stream and consumer stats add for every non-empty batch."""
         sd = self.streams.get(stream)
         if sd is None:
             raise CQError(f"unknown stream {stream}")
-        if isinstance(rows, DataFrame):
-            batch = self._coerce_batch(sd, rows, columns)
-            consumers = [c for r in sd.readers
-                         if (targets is None or r in targets) and
-                         (c := self.views.get(r) or self.transforms.get(r))
-                         is not None and c.active]
-            if (len(consumers) == 1 and consumers[0] in self.views.values()
-                    and self.commit_interval_batches == 1):
-                # single synchronous view: piggyback the row count on
-                # the worker's own materialization (Observation) — no
-                # count job and no separate input checkpoint
-                from pyspark.sql import Observation
-                obs = Observation()
-                batch = batch.observe(obs, F.count(F.lit(1)).alias("n"))
-                self._dispatch(stream, batch,
-                               _depth=getattr(self._depth_tls, "depth", 0),
-                               targets=targets,
-                               n_rows=None, checkpointed=True)
-                n = int(obs.get["n"])
-                consumers[0].stats.input_rows += n
-                sd.input_rows += n  # dispatch couldn't know the count
-                return n
-            # several consumers (or deferred commits): checkpoint FIRST
-            # so the source plan (often a parquet scan) materializes
-            # once; the count then reads checkpointed blocks
-            batch = batch.localCheckpoint(eager=True)
-            n = batch.count()
-            if n == 0:
-                return 0
-        else:
+        n = None
+        if not isinstance(rows, DataFrame):
             rows = list(rows)
             n = len(rows)  # known driver-side: no count job at all
-            if n == 0:
-                return 0
-            batch = self._coerce_batch(sd, rows, columns)
-            # NOTE: no .coalesce() here — a no-shuffle coalesce before
-            # localCheckpoint stalls ~2-5 s in the locality-aware
+        return self._ingest(stream, self._coerce_batch(sd, rows, columns),
+                            n, targets=targets)
+
+    def _ingest(self, stream: str, batch: DataFrame, n: int | None = None,
+                targets: list[str] | None = None,
+                txn: tuple[str, int] | None = None,
+                snapshot: bool = False) -> int:
+        """Enter one coerced batch into ``stream``; the single path for
+        ``insert()``, Structured Streaming epochs (``txn``) and
+        change-feed hops (``snapshot``: a just-written osrel segment).
+        Decides, once for every entry:
+
+        * materialize: checkpoint the input only when several active
+          consumers read it (they must see the same arrival
+          timestamps) or commits are deferred (an accumulated lazy
+          plan may outlive its source).  A lone synchronous view's
+          worker checkpoint materializes the batch anyway, and a
+          snapshot is already stable;
+        * count: ``n`` when the caller knows it (row lists, osrel
+          segments), else an Observation riding the first job that
+          materializes the batch: the input checkpoint, or the lone
+          view's worker checkpoint;
+        * empty: return 0 before dispatch whenever the count is known
+          first; only non-empty batches add to the stats.
+
+        Returns the batch's row count."""
+        sd = self.streams[stream]
+        consumers = [c for r in sd.readers
+                     if (targets is None or r in targets) and
+                     (c := self.views.get(r) or self.transforms.get(r))
+                     is not None and c.active]
+        deferred = self.commit_interval_batches > 1
+        lone = (consumers[0] if len(consumers) == 1 and not deferred
+                and isinstance(consumers[0], ContView) else None)
+        obs = None
+        if n is None:
+            batch, obs = _observe_count(batch)
+        if (consumers or obs) and (deferred or not (lone or snapshot)):
+            # NOTE: no .coalesce() before this checkpoint — a
+            # no-shuffle coalesce stalls ~2-5 s in the locality-aware
             # partition grouper (measured; partitions have no preferred
-            # locations).  Slice-count control happens at creation
-            # instead (_coerce_batch parallelizes ceil(n/1000) slices).
-            consumers = [c for r in sd.readers
-                         if (targets is None or r in targets) and
-                         (c := self.views.get(r) or self.transforms.get(r))
-                         is not None and c.active]
-            if (len(consumers) == 1 and consumers[0] in self.views.values()
-                    and self.commit_interval_batches == 1):
-                # single synchronous view (the same gate as the
-                # DataFrame fast path above): the worker materializes
-                # the batch exactly once inside its own checkpoint
-                # job, and a local-collection plan recomputes for
-                # free, so the eager input checkpoint was a whole
-                # redundant Spark job per insert (guide §1.2)
-                pass
-            else:
-                # several consumers (or deferred commits): materialize
-                # once so every consumer reads the same arrival
-                # timestamps from checkpointed blocks
-                batch = batch.localCheckpoint(eager=True)
-        self._dispatch(stream, batch,
-                       _depth=getattr(self._depth_tls, "depth", 0),
-                       targets=targets, n_rows=n,
-                       checkpointed=True)
+            # locations).  _coerce_batch sizes a list's slices instead.
+            batch = batch.localCheckpoint(eager=True)
+            if obs is not None:
+                n, obs = _observed_count(obs), None
+        if n == 0 or not consumers:
+            return n
+        if obs is not None and lone.replayed(txn):
+            # the view skips a replayed epoch before any job, so the
+            # observed count would never arrive
+            return 0
+
+        def count(n: int) -> int:
+            if n:
+                sd.input_batches += 1
+                sd.input_rows += n
+                for c in consumers:
+                    c.stats.input_rows += n
+            return n
+
+        depth = getattr(self._depth_tls, "depth", 0)
+        if depth > 16:
+            raise CQError("continuous-query cycle detected")
+        if obs is None:
+            count(n)
+        self._depth_tls.depth = depth + 1
+        try:
+            self._dispatch(stream, batch, targets, txn)
+        finally:
+            self._depth_tls.depth = depth
+        if obs is not None:
+            n = count(_observed_count(obs))
         return n
 
     def _coerce_batch(self, sd: StreamDef, rows, columns) -> DataFrame:
@@ -1903,35 +1942,11 @@ class PipelineContext:
         return src.select(*out_cols)
 
     def _dispatch(self, stream: str, batch: DataFrame,
-                  _depth: int = 0, targets: list[str] | None = None,
-                  n_rows: int | None = None,
-                  checkpointed: bool = False,
-                  txn: tuple[str, int] | None = None) -> None:
-        if _depth > 16:
-            raise CQError("continuous-query cycle detected")
-        prev_depth = getattr(self._depth_tls, "depth", 0)
-        self._depth_tls.depth = _depth + 1
-        try:
-            return self._dispatch_inner(stream, batch, _depth, targets,
-                                        n_rows, checkpointed, txn)
-        finally:
-            self._depth_tls.depth = prev_depth
-
-    def _dispatch_inner(self, stream: str, batch: DataFrame,
-                        _depth: int, targets: list[str] | None,
-                        n_rows: int | None,
-                        checkpointed: bool,
-                        txn: tuple[str, int] | None = None) -> None:
+                  targets: list[str] | None,
+                  txn: tuple[str, int] | None) -> None:
         sd = self.streams[stream]
         readers = [r for r in sd.readers
                    if targets is None or r in targets]
-        if not readers:
-            return
-        sd.input_batches += 1
-        if n_rows is not None:
-            sd.input_rows += n_rows
-        if not checkpointed:
-            batch = batch.localCheckpoint(eager=True)
         batch.createOrReplaceTempView(stream)
 
         def run_view(rname: str):
@@ -1939,45 +1954,37 @@ class PipelineContext:
             SEGMENT WRITE (round-8 task 8: the write is a whole Spark
             job, so emitting as soon as this view's merge lands
             overlaps it with sibling merges instead of waiting for the
-            slowest view).  Returns (osrel, segment path) for the
-            SERIAL phase, which only performs downstream DISPATCH —
-            that recursively runs downstream CQ merges and must stay
+            slowest view).  Returns (osrel, segment path, rows) for
+            the SERIAL phase, or None when the commit emitted nothing.
+            The serial phase only performs downstream DISPATCH, which
+            recursively runs downstream CQ merges and must stay
             ordered and unthreaded (two osrels feeding one downstream
             CV must never interleave its matrel commits)."""
             cv = self.views[rname]
             pre = self._worker_input(cv.plan, stream, batch)
-            osrel = f"{rname}_osrel"
-            # SW views emit only via the ticker (tick_sw), matching
-            # the reference (combiner.c:992 — SW osrel rows come
-            # from the SW tick, not per-batch combines)
-            want_os = (cv.plan.sw_column is None and
-                       self._wants_osrel(osrel))
-            if n_rows is not None:
-                cv.stats.input_rows += n_rows
             t0 = time.monotonic()
             if self.commit_interval_batches > 1:
                 # replay guard at ACCUMULATE time: a replayed epoch
                 # whose version is already committed must not re-enter
                 # the pending buffer (it would ride a later interval's
                 # merge and double-count)
-                if txn is not None and (
-                        (done := cv.matrel.txn_version(txn[0]))
-                        is not None) and txn[1] <= done:
+                if cv.replayed(txn):
                     os_rows = None
                 else:
                     cv.accumulate(pre, txn=txn)
                     if len(cv._pending) >= self.commit_interval_batches:
-                        os_rows = cv.commit_pending(emit_changes=want_os)
+                        os_rows = cv.commit_pending(
+                            emit_changes=self._emits_changes(cv))
                     else:
                         os_rows = None
             else:
-                os_rows = cv.process_batch(pre, emit_changes=want_os,
-                                           txn=txn)
+                os_rows = cv.process_batch(
+                    pre, emit_changes=self._emits_changes(cv), txn=txn)
             cv.stats.exec_ms += (time.monotonic() - t0) * 1000.0
-            seg = None
-            if os_rows is not None:
-                seg, _ = self._write_osrel_segment(osrel, os_rows)
-            return osrel, seg
+            if os_rows is None:
+                return None
+            osrel = f"{rname}_osrel"
+            return (osrel, *self._write_osrel_segment(osrel, os_rows))
 
         view_names = [r for r in readers
                       if r in self.views and self.views[r].active]
@@ -2010,14 +2017,8 @@ class PipelineContext:
                 run_view_guarded(rname)
 
         for rname in readers:  # serial phase, original reader order
-            if rname in emissions:
-                osrel, seg = emissions[rname]
-                if seg is not None:
-                    sd2 = self.streams.get(osrel)
-                    if sd2 is not None and sd2.readers:
-                        self._dispatch_osrel(
-                            osrel, self._read_osrel_segment(osrel, seg),
-                            _depth)
+            if emissions.get(rname):
+                self._forward_osrel(*emissions[rname])
             elif rname in self.transforms:
                 t = self.transforms[rname]
                 if not t.active:
@@ -2025,14 +2026,12 @@ class PipelineContext:
                 t0 = time.monotonic()
                 out = t.process_batch(batch)
                 t.stats.exec_ms += (time.monotonic() - t0) * 1000.0
-                if n_rows is not None:
-                    t.stats.input_rows += n_rows
                 # reader-gated like CV osrels: the transform body still
                 # ran (its outputfunc fired inside process_batch), but
                 # the output DataFrame is lazy — skipping the segment
                 # write when nothing reads the osrel costs zero jobs
                 if self._wants_osrel(f"{rname}_osrel"):
-                    self._emit_osrel(f"{rname}_osrel", out, _depth)
+                    self._emit_osrel(f"{rname}_osrel", out)
 
         if failures:  # surface the first failure, siblings fully emitted
             raise failures[next(n for n in view_names if n in failures)]
@@ -2047,6 +2046,14 @@ class PipelineContext:
             return True
         sd = self.streams.get(osrel)
         return bool(sd and sd.readers)
+
+    def _emits_changes(self, cv: "ContView") -> bool:
+        """Should a commit of ``cv`` compute change rows?  SW views emit
+        only via the ticker (tick_sw), matching the reference
+        (combiner.c:992 — SW osrel rows come from the SW tick, not
+        per-batch combines)."""
+        return (cv.plan.sw_column is None and
+                self._wants_osrel(f"{cv.name}_osrel"))
 
     def _worker_input(self, plan: CQPlan, stream: str,
                       batch: DataFrame) -> DataFrame:
@@ -2072,13 +2079,11 @@ class PipelineContext:
         seq/schema/gc/stat state is per-osrel keyed), which is what
         lets parallel_dispatch emit each view's segment as soon as its
         own merge lands instead of after the slowest sibling."""
-        from pyspark.sql import Observation
-        obs = Observation()
         seq = self._osrel_seq.get(osrel, 0)
         seg = os.path.join(self.osrel_root, osrel, f"seg_{seq}")
-        rows.observe(obs, F.count(F.lit(1)).alias("n")) \
-            .write.mode("overwrite").parquet(seg)
-        n = int(obs.get["n"])
+        observed, obs = _observe_count(rows)
+        observed.write.mode("overwrite").parquet(seg)
+        n = _observed_count(obs)
         if n == 0:
             shutil.rmtree(seg, ignore_errors=True)
             return None, 0
@@ -2091,22 +2096,28 @@ class PipelineContext:
             owner.stats.output_rows += n
         return seg, n
 
-    def _emit_osrel(self, osrel: str, rows: DataFrame, depth: int) -> int:
+    def _emit_osrel(self, osrel: str, rows: DataFrame) -> int:
         """Segment write + downstream dispatch in one step (the
         transform/ticker path; batch-parallel CV dispatch splits the
         two so dispatch stays in reader order).  Returns rows
         emitted."""
         seg, n = self._write_osrel_segment(osrel, rows)
-        if seg is None:
-            return 0
-        sd = self.streams.get(osrel)
-        if sd is not None and sd.readers:
-            # downstream CQs read the just-written segment — a stable
-            # snapshot, no recompute of the change-row plan
-            self._dispatch_osrel(osrel,
-                                 self._read_osrel_segment(osrel, seg),
-                                 depth)
+        self._forward_osrel(osrel, seg, n)
         return n
+
+    def _forward_osrel(self, osrel: str, seg: str | None, n: int) -> None:
+        """Feed a just-written segment of ``n`` change rows to the CQs
+        reading ``osrel``.  They read the segment back: a stable
+        snapshot (immutable until retention GC, 256 segments away), so
+        the change-row plan is not recomputed and, with synchronous
+        commits, not re-checkpointed either (``_ingest`` snapshot)."""
+        sd = self.streams.get(osrel)
+        if seg is None or sd is None or not sd.readers:
+            return
+        rows = self._read_osrel_segment(osrel, seg)
+        if not sd.schema.fields:
+            sd.schema = rows.schema
+        self._ingest(osrel, rows, n, snapshot=True)
 
     def _read_osrel_segment(self, osrel: str, seg: str) -> DataFrame:
         """Read back ONE just-written segment.  The writer recorded the
@@ -2132,32 +2143,14 @@ class PipelineContext:
         for path in segs[: max(0, len(segs) - self.osrel_retention_segments)]:
             shutil.rmtree(path, ignore_errors=True)
 
-    def _dispatch_osrel(self, osrel: str, rows: DataFrame, depth: int) -> None:
-        sd = self.streams[osrel]
-        if not sd.schema.fields:
-            sd.schema = rows.schema
-        # the segment just written IS a stable snapshot (immutable until
-        # retention GC, 256 segments away), so re-checkpointing it in
-        # _dispatch was a whole redundant Spark job per osrel hop —
-        # downstream consumers can scan the parquet directly (guide
-        # §1.2 constant-work removal).  Deferred-commit mode keeps the
-        # checkpoint: an accumulate()d lazy plan may outlive many more
-        # segment writes, and checkpointed blocks cannot be GC'd out
-        # from under it.
-        self._dispatch(osrel, rows, _depth=depth + 1,
-                       checkpointed=self.commit_interval_batches == 1)
-
     # -- reads ----------------------------------------------------------------
     def _flush_cv(self, name: str) -> None:
         cv = self.views.get(name)
         if cv is None or not cv._pending:
             return
-        osrel = f"{name}_osrel"
-        want_os = (cv.plan.sw_column is None and
-                   self._wants_osrel(osrel))
-        os_rows = cv.commit_pending(emit_changes=want_os)
+        os_rows = cv.commit_pending(emit_changes=self._emits_changes(cv))
         if os_rows is not None:
-            self._emit_osrel(osrel, os_rows, 0)
+            self._emit_osrel(f"{name}_osrel", os_rows)
 
     def read_view(self, name: str, at: float | None = None) -> DataFrame:
         cv = self.views.get(name)
@@ -2332,11 +2325,9 @@ class PipelineContext:
         os.makedirs(path, exist_ok=True)
         n = 0
         if states is not None:
-            from pyspark.sql import Observation
-            obs = Observation()
-            states.observe(obs, F.count(F.lit(1)).alias("n")) \
-                .write.mode("overwrite").parquet(os.path.join(path, "states"))
-            n = int(obs.get["n"])
+            states, obs = _observe_count(states)
+            states.write.mode("overwrite").parquet(os.path.join(path, "states"))
+            n = _observed_count(obs)
         with open(os.path.join(path, "DUMP.json"), "w") as f:
             json.dump({"name": name, "sql": cv.sql, "rows": n}, f)
         return n
@@ -2597,7 +2588,7 @@ class PipelineContext:
         changes = (joined.filter(~F.col("old").eqNullSafe(F.col("new")))
                    .select("old", "new"))
         cv.reap(now=now)
-        n = self._emit_osrel(f"{name}_osrel", changes, 0)
+        n = self._emit_osrel(f"{name}_osrel", changes)
         # emission consumed both snapshots; promote the new one.  The
         # promotion is not atomic with the emission write: a crash in
         # between re-diffs against the pre-emission snapshot next tick

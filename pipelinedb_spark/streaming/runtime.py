@@ -125,9 +125,9 @@ def _foreach_batch(ctx: PipelineContext, stream: str, checkpoint: str,
             # extracted documents); runs inside the epoch, so the
             # effectively-once guarantees cover the extraction too
             batch_df = transform(batch_df)
-        coerced = ctx._coerce_batch(sd, batch_df, None)
-        if coerced.take(1):
-            ctx._dispatch(stream, coerced, txn=(app_id, int(epoch_id)))
+        # an epoch is an ordinary batch: insert()'s ingest rule
+        ctx._ingest(stream, ctx._coerce_batch(sd, batch_df, None),
+                    txn=(app_id, int(epoch_id)))
         if any(ctx.views[r]._pending for r in sd.readers
                if r in ctx.views):
             return  # pending epochs would be skipped by the marker

@@ -218,19 +218,19 @@ def test_broadcast_matrix_scores_fallbacks(spark):
                                     0.45) is None
 
 
-def _spy_osrel_dispatch(ctx):
-    seen = []
-    orig = ctx._dispatch
+def _spy_segment_checkpoints(ctx, monkeypatch):
+    """Returns a probe listing, per osrel segment read back for
+    downstream dispatch, whether that frame was checkpointed."""
+    calls = _count_checkpoints(monkeypatch)
+    readbacks = []
+    orig = ctx._read_osrel_segment
 
-    def spy(stream, batch, _depth=0, targets=None, n_rows=None,
-            checkpointed=False, txn=None):
-        if stream.endswith("_osrel"):
-            seen.append(checkpointed)
-        return orig(stream, batch, _depth=_depth, targets=targets,
-                    n_rows=n_rows, checkpointed=checkpointed, txn=txn)
+    def spy(osrel, seg):
+        readbacks.append(orig(osrel, seg))
+        return readbacks[-1]
 
-    ctx._dispatch = spy
-    return seen
+    ctx._read_osrel_segment = spy
+    return lambda: [any(c is df for c in calls) for df in readbacks]
 
 
 def _cascade(ctx):
@@ -242,7 +242,8 @@ def _cascade(ctx):
                                 "FROM output_of('ocg_up')")
 
 
-def test_osrel_dispatch_skips_checkpoint_when_synchronous(spark, tmp_path):
+def test_osrel_dispatch_skips_checkpoint_when_synchronous(
+        spark, monkeypatch, tmp_path):
     """commit_interval_batches=1: the dispatched frame is the
     just-written segment read-back (a stable parquet snapshot) — no
     re-checkpoint job; downstream results exact."""
@@ -250,27 +251,28 @@ def test_osrel_dispatch_skips_checkpoint_when_synchronous(spark, tmp_path):
                           num_buckets=4)
     try:
         _cascade(ctx)
-        seen = _spy_osrel_dispatch(ctx)
+        seen = _spy_segment_checkpoints(ctx, monkeypatch)
         ctx.insert("ocg_s", [{"k": "a", "v": 1}, {"k": "b", "v": 2}])
         ctx.insert("ocg_s", [{"k": "a", "v": 3}])
-        assert seen and all(seen)
+        assert seen() and not any(seen())
         r = ctx.read_view("ocg_down").collect()[0]
         assert (r["n"], r["sv"]) == (3, 6)
     finally:
         ctx.close()
 
 
-def test_osrel_dispatch_keeps_checkpoint_when_deferred(spark, tmp_path):
+def test_osrel_dispatch_keeps_checkpoint_when_deferred(
+        spark, monkeypatch, tmp_path):
     """commit_interval_batches>1: accumulated lazy plans can outlive
     later segment writes, so the checkpoint must stay."""
     ctx = PipelineContext(spark, root=str(tmp_path / "defer"),
                           num_buckets=4, commit_interval_batches=2)
     try:
         _cascade(ctx)
-        seen = _spy_osrel_dispatch(ctx)
+        seen = _spy_segment_checkpoints(ctx, monkeypatch)
         for i in range(4):  # two upstream commits, two osrel emissions
             ctx.insert("ocg_s", [{"k": "a", "v": i}, {"k": "b", "v": i}])
-        assert seen and not any(seen)
+        assert seen() and all(seen())
         r = ctx.read_view("ocg_down").collect()[0]
         assert (r["n"], r["sv"]) == (8, 12)
     finally:
@@ -278,13 +280,14 @@ def test_osrel_dispatch_keeps_checkpoint_when_deferred(spark, tmp_path):
 
 
 def _count_checkpoints(monkeypatch):
-    """Count eager localCheckpoint invocations (classic DataFrame)."""
+    """Record the frames localCheckpoint is called on (classic
+    DataFrame)."""
     import pyspark.sql.classic.dataframe as cdf
     calls = []
     orig = cdf.DataFrame.localCheckpoint
 
     def spy(self, eager=True):
-        calls.append(eager)
+        calls.append(self)
         return orig(self, eager=eager)
 
     monkeypatch.setattr(cdf.DataFrame, "localCheckpoint", spy)

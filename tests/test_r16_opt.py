@@ -23,7 +23,10 @@
 * empty-DataFrame insert fast path — an empty DataFrame insert into a
   single synchronous global-agg view must not commit a zero-count
   matrel row (the pre-r15 n==0 early return, restored without the
-  input-count job the fast path removed).
+  input-count job the fast path removed); into a grouped view it
+  returns 0 even when Spark prunes the observed count node.
+* one ingest path — a 2-view DataFrame insert and a 1-view streaming
+  epoch cost exactly the jobs of the matching list insert.
 """
 
 from __future__ import annotations
@@ -134,18 +137,23 @@ ORDER BY 1, 2
 # _osrel_rows union+groupBy rewrite)
 # ---------------------------------------------------------------------------
 
-def _jobs_for(spark, fn) -> int:
-    """Run ``fn`` under a fresh job group and return the number of
-    Spark jobs it submitted (statusTracker — deterministic where wall
-    time swings with ambient load)."""
+def _last_job_id(spark) -> int:
     sc = spark.sparkContext
-    group = f"r16_jobcount_{id(fn)}"
-    sc.setJobGroup(group, "job-count probe")
-    try:
-        fn()
-    finally:
-        sc.setJobGroup(None, None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    # job-start events reach the status store asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10000)
+    return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+
+
+def _jobs_for(spark, fn) -> int:
+    """Run ``fn`` and return the number of Spark jobs it submitted, on
+    any thread (statusTracker — deterministic where wall time swings
+    with ambient load).  Job ids are a session-wide sequence, so the
+    watermark before and after also counts the jobs that
+    parallel_dispatch runs on pool threads; a job group would not, as
+    it is thread-local."""
+    before = _last_job_id(spark)
+    fn()
+    return _last_job_id(spark) - before
 
 
 def test_cascade_insert_job_count_ceiling(spark, tmp_path):
@@ -364,6 +372,90 @@ def test_empty_df_insert_single_view_commits_nothing(spark, tmp_path):
         assert (r["n"], r["sv"]) == (1, 2)
     finally:
         ctx.close()
+
+
+def test_empty_df_insert_grouped_single_view_returns_zero(spark, tmp_path):
+    """An empty DataFrame, and a non-empty one whose filter folds to
+    empty, inserted into a stream read by one GROUPED view: Spark
+    proves the input empty and prunes the observed count node below
+    the aggregate, so the count Observation completes with a
+    zero-length row.  Each insert must return 0 and write no matrel
+    version."""
+    ctx = PipelineContext(spark, root=str(tmp_path / "eg"), num_buckets=4)
+    try:
+        ctx.create_stream("eg_s", "k string, v long")
+        ctx.create_view("eg_cv", "SELECT k, count(*) AS n FROM eg_s "
+                                 "GROUP BY k")
+        ctx.insert("eg_s", [{"k": "a", "v": 1}])
+        cv = ctx.views["eg_cv"]
+        v1 = cv.matrel._read_manifest()["version"]
+        empty = spark.createDataFrame([], "k string, v long")
+        folded = spark.createDataFrame([("a", 1)], "k string, v long") \
+            .filter(F.col("v") > 100)
+        assert ctx.insert("eg_s", empty) == 0
+        assert ctx.insert("eg_s", folded) == 0
+        assert cv.matrel._read_manifest()["version"] == v1
+        assert [tuple(r) for r in ctx.read_view("eg_cv").collect()] \
+            == [("a", 1)]
+    finally:
+        ctx.close()
+
+
+# ---------------------------------------------------------------------------
+# one ingest path: every entry costs the jobs of a list insert
+# ---------------------------------------------------------------------------
+
+def _ingest_jobs_pair(spark, tmp_path, views: int, second) -> tuple:
+    """Job counts of a warm list insert into one stream and of
+    ``second(ctx, stream, rows)`` into a twin stream whose ``views``
+    identical grouped views hold identical state."""
+    ctx = PipelineContext(spark, root=str(tmp_path / "ip"), num_buckets=4)
+    rows = [{"k": "a", "v": 1}, {"k": "b", "v": 2}]
+    try:
+        for s in ("ip_list", "ip_other"):
+            ctx.create_stream(s, "k string, v long")
+            for i in range(views):
+                ctx.create_view(f"{s}_cv{i}", "SELECT k, count(*) AS n, "
+                                f"sum(v) AS sv FROM {s} GROUP BY k")
+            ctx.insert(s, rows)  # warm-up: first matrel version
+        n_list = _jobs_for(spark, lambda: ctx.insert("ip_list", rows))
+        n_other = _jobs_for(spark, lambda: second(ctx, "ip_other", rows))
+        for s in ("ip_list", "ip_other"):
+            got = {r["k"]: (r["n"], r["sv"])
+                   for r in ctx.read_view(f"{s}_cv0").collect()}
+            assert got == {"a": (2, 2), "b": (2, 4)}, (s, got)
+        return n_list, n_other
+    finally:
+        ctx.close()
+
+
+def test_df_insert_costs_list_insert_jobs(spark, tmp_path):
+    """A 2-view DataFrame insert materializes its input once, with the
+    row count riding that checkpoint: the same jobs as a 2-view list
+    insert (the former separate count job made it 2 more)."""
+    def df_insert(ctx, stream, rows):
+        assert ctx.insert(stream, spark.createDataFrame(
+            [(r["k"], r["v"]) for r in rows], "k string, v long")) == 2
+
+    n_list, n_df = _ingest_jobs_pair(spark, tmp_path, 2, df_insert)
+    assert n_df == n_list, (n_df, n_list)
+
+
+def test_streaming_epoch_costs_list_insert_jobs(spark, tmp_path):
+    """A Structured Streaming epoch into a 1-view stream follows the
+    insert() rule: no emptiness probe and no input checkpoint, the
+    count riding the view's worker checkpoint — the same jobs as a
+    1-view list insert.  The foreachBatch handler is driven directly
+    with a DataFrame."""
+    from pipelinedb_spark.streaming.runtime import _foreach_batch
+
+    def epoch(ctx, stream, rows):
+        handler = _foreach_batch(ctx, stream, str(tmp_path / "ip_ck"))
+        handler(spark.createDataFrame([(r["k"], r["v"]) for r in rows],
+                                      "k string, v long"), 0)
+
+    n_list, n_epoch = _ingest_jobs_pair(spark, tmp_path, 1, epoch)
+    assert n_epoch == n_list, (n_epoch, n_list)
 
 
 # ---------------------------------------------------------------------------

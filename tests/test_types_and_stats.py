@@ -96,6 +96,41 @@ def test_stats_and_listings(ctx):
     assert db["view"]["exec_ms"] > 0
 
 
+def test_stats_count_streamed_epochs_and_change_feed_hops(ctx, tmp_path):
+    """Every ingest entry counts its rows: a Structured Streaming epoch
+    (the foreachBatch handler driven directly with a DataFrame) and
+    the change-feed hop into a view over output_of(...).  An empty
+    epoch counts no batch."""
+    from pipelinedb_spark.streaming.runtime import _foreach_batch
+
+    ctx.create_stream("st_ep", "k string, v long")
+    ctx.create_view("cv_ep", "SELECT k, count(*) AS n FROM st_ep "
+                             "GROUP BY k")
+    ctx.create_view("cv_ep_down", "SELECT count(*) AS n "
+                                  "FROM output_of('cv_ep')")
+    handler = _foreach_batch(ctx, "st_ep", str(tmp_path / "ck_ep"))
+    handler(ctx.spark.createDataFrame([], "k string, v long"), 0)
+    handler(ctx.spark.createDataFrame([("a", 1), ("b", 2), ("a", 3)],
+                                      "k string, v long"), 1)
+    ss = {r["stream"]: r for r in ctx.stream_stats().collect()}
+    assert (ss["st_ep"]["input_rows"], ss["st_ep"]["input_batches"]) \
+        == (3, 1)
+    # the epoch changed groups a and b: two change rows per hop
+    assert (ss["cv_ep_osrel"]["input_rows"],
+            ss["cv_ep_osrel"]["input_batches"]) == (2, 1)
+    ctx.insert("st_ep", [{"k": "c", "v": 4}])
+    ss = {r["stream"]: r for r in ctx.stream_stats().collect()}
+    assert (ss["st_ep"]["input_rows"], ss["st_ep"]["input_batches"]) \
+        == (4, 2)
+    assert (ss["cv_ep_osrel"]["input_rows"],
+            ss["cv_ep_osrel"]["input_batches"]) == (3, 2)
+    stats = {r["name"]: r for r in ctx.stats_df().collect()}
+    assert stats["cv_ep"]["input_rows"] == 4
+    assert stats["cv_ep"]["output_rows"] == 3
+    assert stats["cv_ep_down"]["input_rows"] == 3
+    assert ctx.read_view("cv_ep_down").collect()[0]["n"] == 3
+
+
 def test_complex_typed_stream_coercion(ctx):
     """Array / map / struct stream columns coerce element-wise on
     insert (reference cont_complex_types.sql, typed_streams.sql) —
