@@ -7,7 +7,7 @@ Two module-level flips move BOTH storage layers (continuous-view
 matrels and persisted operator indexes) from posix-rename manifests
 to numbered conditional-PUT objects:
 
-    matrel.DEFAULT_MANIFEST_FORMAT = "condput"
+    manifestio.DEFAULT_MANIFEST_FORMAT = "condput"
     manifestio.CLIENT_FACTORY = lambda d: S3ObjectClient("bucket", d)
 
 Everything else is unchanged: the engine's commit protocol was
@@ -47,7 +47,6 @@ def main() -> None:
     sys.path.insert(0, os.path.join(root_dir, "tests"))
 
     import pipelinedb_spark.manifestio as manifestio
-    import pipelinedb_spark.matrel as matrel
     from pipelinedb_spark import PipelineContext, get_spark
     from pipelinedb_spark.manifestio import S3ObjectClient
     from s3http_fake import S3HttpFake
@@ -62,7 +61,7 @@ def main() -> None:
 
     with S3HttpFake() as fake:
         # ---- the deployment flip -----------------------------------
-        matrel.DEFAULT_MANIFEST_FORMAT = "condput"
+        manifestio.DEFAULT_MANIFEST_FORMAT = "condput"
         manifestio.CLIENT_FACTORY = lambda d: S3ObjectClient(
             "training-bucket", os.path.abspath(d),
             endpoint_url=fake.endpoint_url, region_name="us-east-1")

@@ -368,11 +368,11 @@ class ContView:
         return grouped_agg(pre_df, keys, key_names, jvm_aggs, pd_aggs)
 
     # -- combiner: merge partials over (old ∪ delta) ------------------------
-    def merge_fn(self, df: DataFrame,
-                 key_cols: list[str] | None = None) -> DataFrame:
-        key_names = (self._group_cols if key_cols is None
-                     else key_cols) + [BUCKET_COL]
-        keys = [F.col(c) for c in key_names]
+    def state_merge_aggs(self) -> tuple[list, list]:
+        """(JVM, pandas) aggregates that merge each aggregate's partial
+        states back into state columns of the same names — the one
+        combine rule of the commit-path merge, ``combine_read`` and the
+        ``combine()`` SQL rewrite."""
         jvm_aggs, pd_aggs = [], []
         for call in self.plan.aggs:
             spec = self._registry.get(call.func)
@@ -380,6 +380,23 @@ class ContView:
             s = lambda suffix, out=call.out: F.col(state_col(out, suffix))
             for suffix, col in spec.merge_exprs(s, call.args).items():
                 target.append(col.alias(state_col(call.out, suffix)))
+        return jvm_aggs, pd_aggs
+
+    def with_finalized(self, df: DataFrame, prefix: str = "") -> DataFrame:
+        """``df`` plus one column per aggregate, ``prefix + out``,
+        holding the finalized value of its merged states."""
+        for call in self.plan.aggs:
+            spec = self._registry.get(call.func)
+            s = lambda suffix, out=call.out: F.col(state_col(out, suffix))
+            df = df.withColumn(prefix + call.out, spec.finalize(s, call.args))
+        return df
+
+    def merge_fn(self, df: DataFrame,
+                 key_cols: list[str] | None = None) -> DataFrame:
+        key_names = (self._group_cols if key_cols is None
+                     else key_cols) + [BUCKET_COL]
+        keys = [F.col(c) for c in key_names]
+        jvm_aggs, pd_aggs = self.state_merge_aggs()
         if not jvm_aggs and not pd_aggs:
             jvm_aggs = [F.sum(F.col(state_col("_present", "n")))
                         .alias(state_col("_present", "n"))]
@@ -398,12 +415,8 @@ class ContView:
             df = self.merge_fn(
                 df.withColumn(BUCKET_COL, F.lit(0)),
                 key_cols=[c for c in self._group_cols if c != STEP_COL])
-        fin_names: dict[str, str] = {}
-        for call in plan.aggs:
-            spec = self._registry.get(call.func)
-            s = lambda suffix, out=call.out: F.col(state_col(out, suffix))
-            df = df.withColumn(f"__fin_{call.out}", spec.finalize(s, call.args))
-            fin_names[call.out] = f"__fin_{call.out}"
+        df = self.with_finalized(df, "__fin_")
+        fin_names = {call.out: f"__fin_{call.out}" for call in plan.aggs}
         # map normalized group-expr text -> matrel column
         gmap = {re.sub(r"\s+", "", g).lower(): n
                 for g, n in zip(plan.group_exprs, plan.group_names)}
@@ -512,7 +525,7 @@ class ContView:
         txns: dict[str, int] = {}
         for df, t in batches:
             if t is not None:
-                if self.replayed(t):
+                if self.matrel.replayed(t):
                     continue
                 txns[t[0]] = max(txns.get(t[0], -1), t[1])
             keep.append(df)
@@ -523,16 +536,6 @@ class ContView:
             unioned = unioned.unionByName(b, allowMissingColumns=True)
         return self.process_batch(unioned, emit_changes=emit_changes,
                                   txn=txns or None)
-
-    def replayed(self, txn: tuple[str, int] | dict | None) -> bool:
-        """Has every ``(source app id, version)`` in ``txn`` already
-        committed to this view's matrel?  ``txn`` is one pair or an
-        {app_id: version} dict; None is never a replay."""
-        if isinstance(txn, tuple):
-            txn = {txn[0]: txn[1]}
-        return bool(txn) and all(
-            (done := self.matrel.txn_version(a)) is not None and v <= done
-            for a, v in txn.items())
 
     def process_batch(self, pre_df: DataFrame,
                       emit_changes: bool = True,
@@ -552,7 +555,7 @@ class ContView:
         stores).  The skip check re-runs under commit_lock right
         before the merge: the cheap pre-check alone was a TOCTOU —
         two threads carrying the same epoch could both pass it."""
-        if self.replayed(txn):
+        if self.matrel.replayed(txn):
             return None  # replayed source batch — already merged
         # bucket before the checkpoint, and piggyback the affected-
         # bucket probe on the checkpoint job itself (Observation): one
@@ -587,7 +590,7 @@ class ContView:
         if in_obs is not None and _observed_count(in_obs) == 0:
             return None  # empty batch into a global aggregate
         with self.commit_lock:
-            if self.replayed(txn):
+            if self.matrel.replayed(txn):
                 return None  # lost the race: another thread merged it
             old, merged = self.matrel.merge(
                 delta, self._group_cols, self.merge_fn, affected=affected,
@@ -737,24 +740,32 @@ class ContView:
         return changed.select("old", "new", "delta", "delta_states")
 
     # -- reads ---------------------------------------------------------------
-    def sw_states(self, at: float | None = None) -> DataFrame | None:
-        """In-window matrel states of a SW view.  Under the step-
-        bucketed layout, expired steps are pruned at the MANIFEST
-        (their files are never opened); the exact step filter then
-        trims the one boundary bucket."""
-        now = at if at is not None else time.time()
-        cutoff = now - float(self.plan.sw_seconds)
+    def _window_states(self, at: float, bucket_ids, read
+                       ) -> DataFrame | None:
+        """In-window states of a SW view at logical time ``at``: under
+        the step-bucketed layout, expired steps are pruned at the
+        MANIFEST (``bucket_ids()`` → ids; their files are never
+        opened); ``read(buckets)`` (None = all) reads the rest, and
+        the exact step filter then trims the one boundary bucket."""
+        cutoff = at - float(self.plan.sw_seconds)
         tol = float(self.plan.sw_step_seconds)
+        buckets = None
         if self._time_bucketed:
-            live = [b for b in self.matrel.bucket_ids()
-                    if b * tol >= cutoff - tol]
-            states = self.matrel.read(live) if live else None
-        else:
-            states = self.matrel.read()
+            buckets = [b for b in bucket_ids() if b * tol >= cutoff - tol]
+            if not buckets:
+                return None
+        states = read(buckets)
         if states is None:
             return None
         return states.filter(
             ts_epoch(F.col(STEP_COL)) >= F.lit(cutoff) - tol)
+
+    def sw_states(self, at: float | None = None) -> DataFrame | None:
+        """In-window matrel states of a SW view (window at ``at``,
+        default now)."""
+        return self._window_states(
+            at if at is not None else time.time(),
+            self.matrel.bucket_ids, self.matrel.read)
 
     def read(self, at: float | None = None) -> DataFrame:
         if self.plan.sw_column is not None:
@@ -789,17 +800,9 @@ class ContView:
                 f"no pin {pin_name!r} on view {self.matrel.name}")
         if self.plan.sw_column is None:
             return self.matrel.read_pinned(pin_name)
-        cutoff = float(rec["at"]) - float(self.plan.sw_seconds)
-        tol = float(self.plan.sw_step_seconds)
-        buckets = None
-        if self._time_bucketed:
-            buckets = [int(b) for b in rec["buckets"]
-                       if int(b) * tol >= cutoff - tol]
-        states = self.matrel.read_pinned(pin_name, buckets)
-        if states is None:
-            return None
-        return states.filter(
-            ts_epoch(F.col(STEP_COL)) >= F.lit(cutoff) - tol)
+        return self._window_states(
+            float(rec["at"]), lambda: [int(b) for b in rec["buckets"]],
+            lambda buckets: self.matrel.read_pinned(pin_name, buckets))
 
     def _overlay_schema(self) -> T.StructType:
         empty = self.ctx.empty_stream_df(self.plan.stream)
@@ -1856,7 +1859,7 @@ class PipelineContext:
                 n, obs = _observed_count(obs), None
         if n == 0 or not consumers:
             return n
-        if obs is not None and lone.replayed(txn):
+        if obs is not None and lone.matrel.replayed(txn):
             # the view skips a replayed epoch before any job, so the
             # observed count would never arrive
             return 0
@@ -1968,7 +1971,7 @@ class PipelineContext:
                 # whose version is already committed must not re-enter
                 # the pending buffer (it would ride a later interval's
                 # merge and double-count)
-                if cv.replayed(txn):
+                if cv.matrel.replayed(txn):
                     os_rows = None
                 else:
                     cv.accumulate(pre, txn=txn)
@@ -2280,23 +2283,11 @@ class PipelineContext:
             return cv.read(at=at).limit(0)
         group_by = group_by or []
         keys = [F.col(c) for c in group_by]
-        jvm_aggs, pd_aggs = [], []
-        for call in cv.plan.aggs:
-            spec = cv.ctx.registry.get(call.func)
-            target = pd_aggs if spec.pandas else jvm_aggs
-            s = lambda suffix, out=call.out: F.col(state_col(out, suffix))
-            for suffix, col in spec.merge_exprs(s, call.args).items():
-                target.append(col.alias(state_col(call.out, suffix)))
+        jvm_aggs, pd_aggs = cv.state_merge_aggs()
         merged = (grouped_agg(states, keys, group_by, jvm_aggs, pd_aggs)
                   if (jvm_aggs or pd_aggs) else states)
-        df = merged
-        out_cols = list(group_by)
-        for call in cv.plan.aggs:
-            spec = cv.ctx.registry.get(call.func)
-            s = lambda suffix, out=call.out: F.col(state_col(out, suffix))
-            df = df.withColumn(call.out, spec.finalize(s, call.args))
-            out_cols.append(call.out)
-        return df.select(*out_cols)
+        return cv.with_finalized(merged).select(
+            *group_by, *[call.out for call in cv.plan.aggs])
 
     # -- ops ------------------------------------------------------------------
     def combine_table(self, name: str, states: DataFrame) -> None:
@@ -2763,27 +2754,15 @@ class PipelineContext:
             keys.append(F.expr(g).alias(name))
             gmap[re.sub(r"\s+", "", g).lower()] = name
         # re-merge partial states under the query grouping
-        jvm_aggs, pd_aggs = [], []
-        for call in cv.plan.aggs:
-            spec = self.registry.get(call.func)
-            target = pd_aggs if spec.pandas else jvm_aggs
-            s = lambda suffix, out=call.out: F.col(state_col(out, suffix))
-            for suffix, col in spec.merge_exprs(s, call.args).items():
-                target.append(col.alias(state_col(call.out, suffix)))
+        jvm_aggs, pd_aggs = cv.state_merge_aggs()
         if not (jvm_aggs or pd_aggs):
             return None
         try:
             merged = grouped_agg(base, keys, key_names, jvm_aggs, pd_aggs)
             # finalize every combinable column, then evaluate SELECT
             # items with combine(x) → the finalized column
-            fin = {}
-            df = merged
-            for call in cv.plan.aggs:
-                spec = self.registry.get(call.func)
-                s = lambda suffix, out=call.out: F.col(state_col(out, suffix))
-                fname = f"__fin_{call.out}"
-                df = df.withColumn(fname, spec.finalize(s, call.args))
-                fin[call.out] = fname
+            df = cv.with_finalized(merged, "__fin_")
+            fin = {call.out: f"__fin_{call.out}" for call in cv.plan.aggs}
         except Exception as exc:
             logging.getLogger(__name__).warning(
                 "combine rewrite: merge/finalize failed, falling back "

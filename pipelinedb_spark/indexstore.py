@@ -43,11 +43,13 @@ an unreferenced version dir that no reader ever lists; a crash after
 the swap is simply the post-state.  Readers resolve the live dir set
 from the manifest and never list ``root`` itself.
 
-GC mirrors matrel._gc: a dereferenced dir is stamped with
-``.unref_ts`` on the first sweep that finds it and unlinked on a
-later sweep once the stamp is older than ``gc_grace_seconds`` —
-protecting in-flight readers whose lazy plans still hold the old
-paths.  Version dirs numbered ABOVE the manifest version are
+GC uses the dereference grace both stores share
+(``manifestio.reclaim``): a dereferenced dir is grace-stamped on the
+first sweep that finds it and unlinked on a later sweep once the stamp
+is older than ``gc_grace_seconds`` — protecting in-flight readers
+whose lazy plans still hold the old paths.  Replay tags, format
+resolution and the ambiguous-write check are manifestio's shared rules
+too.  Version dirs numbered ABOVE the manifest version are
 in-flight commits by a concurrent writer and are never collected;
 ``.stage-*`` dirs are never touched by automatic GC at all (they are
 indistinguishable from an in-flight write).  Commits serialize on an
@@ -63,51 +65,33 @@ the object-storage shape (S3 ``PUT If-None-Match``), with no rename
 in the commit path at all.  Data-dir publishes stay invisible until
 a manifest references them under BOTH strategies, so their rename
 needs no atomicity.  An existing store keeps its layout; new stores
-take ``manifest_format=`` or the module default.
+take ``manifest_format=`` or ``manifestio.DEFAULT_MANIFEST_FORMAT``.
 """
 
 from __future__ import annotations
 
 import os
 import re
-import shutil
 import time
 import uuid
 
 from pyspark.sql import DataFrame
 
-from .manifestio import (CommitConflict, RenameManifestIO,
-                         resolve_manifest_io)
+from . import manifestio as mio
+from .manifestio import (CommitConflict, CommitOutcomeUnknown,
+                         RenameManifestIO)
 
 __all__ = ["IndexStore", "CommitConflict", "CommitOutcomeUnknown",
            "open_index", "read_index", "pin_index",
            "read_pinned_index", "MANIFEST"]
 
 
-class CommitOutcomeUnknown(RuntimeError):
-    """A rename-mode commit wrote the manifest, lost its lock, and the
-    head then stayed unreadable through the bounded re-read retries —
-    the write may or may not be the live ancestry, so NOTHING may be
-    renamed: not a renumber (the manifest may reference the committed
-    name) and not a conflict-shelve (same reason).  The committed dir
-    is intentionally left in place under its v-name; if the head
-    recovers and does not reference it, ``gc`` ignores v-dirs, so an
-    operator reclaims it via the manifest itself (ADVICE round 10 —
-    the old ``continue`` converted a transient pointer-read error
-    into a possible dangling live dirs entry)."""
-
 MANIFEST = "_manifest.json"
 _VDIR_RE = re.compile(r"^v(\d+)-[0-9a-f]+$")
-# replay-tag retention, as matrel.MAX_TXN_SOURCES: sources idle for 64
-# commits have no in-flight replay to detect
-MAX_TXN_SOURCES = 64
-# default manifest strategy for NEW stores (tests/deployments flip to
-# "condput" for object-storage semantics); existing stores are sticky
-DEFAULT_MANIFEST_FORMAT = "rename"
-# deployment-wide commit-lock default (the DEFAULT_MANIFEST_FORMAT
-# pattern): operators construct IndexStore internally, so an
-# object-storage deployment flips this to False alongside setting
-# the format default to "condput" — per-store commit_lock= overrides
+# deployment-wide commit-lock default: operators construct IndexStore
+# internally, so an object-storage deployment flips this to False
+# alongside setting manifestio.DEFAULT_MANIFEST_FORMAT to "condput" —
+# per-store commit_lock= overrides
 DEFAULT_COMMIT_LOCK = True
 
 
@@ -130,30 +114,8 @@ class IndexStore:
                                 if commit_lock is None else commit_lock)
 
     # -- manifest ------------------------------------------------------
-    @property
-    def manifest_path(self) -> str:
-        return os.path.join(self.root, MANIFEST)
-
     def _io(self):
-        # getattr: some fault tests stub __init__ and set only
-        # root/gc_grace_seconds.  Memoized: format resolution is
-        # sticky for the store's life, and the condput IO instance
-        # carries the head-seq probe cache (manifestio.py) — a fresh
-        # instance per call would re-LIST for exists() and discard it
-        io = getattr(self, "_io_inst", None)
-        if io is None:
-            io = resolve_manifest_io(
-                self.root, MANIFEST,
-                getattr(self, "manifest_format", None),
-                DEFAULT_MANIFEST_FORMAT)
-            # memoize only once the store EXISTS on disk: a resolution
-            # made against an empty root is a default, not a sticky
-            # fact — freezing it would blind an exists()-polling
-            # reader to another process initializing the root in the
-            # other format (round-13 review)
-            if io.exists():
-                self._io_inst = io
-        return io
+        return mio.store_io(self, self.root, MANIFEST)
 
     def exists(self) -> bool:
         return self._io().exists()
@@ -404,13 +366,7 @@ class IndexStore:
             # rename is assumed
             os.rename(state["fpath"] or staged, new_fpath)
             state["fpath"] = new_fpath
-            # a pre-commit GC pass may have grace-stamped the stage
-            # dir; the stamp must not ride into the committed dir, or
-            # a LATER dereference would skip its grace window
-            try:
-                os.remove(os.path.join(new_fpath, ".unref_ts"))
-            except OSError:
-                pass
+            mio.clear_reclaim_stamp(new_fpath)
             if not replace:
                 return list(m["dirs"]) + [final]
             extra: list[str] = []
@@ -491,19 +447,7 @@ class IndexStore:
                     eff_meta = m.get("meta", {})
                 out = {"version": version, "dirs": dirs,
                        "meta": eff_meta}
-                txns = dict(m.get("txns", {}))
-                if txn is not None:
-                    app, ver = txn
-                    prev = txns.get(app)
-                    txns[app] = [max(int(ver),
-                                     int(prev[0] if prev is not None
-                                         else -1)),
-                                 version]
-                    if len(txns) > MAX_TXN_SOURCES:  # most recent kept
-                        txns = dict(sorted(txns.items(),
-                                           key=lambda kv: kv[1][1],
-                                           reverse=True)
-                                    [:MAX_TXN_SOURCES])
+                txns = mio.fold_txns(m.get("txns", {}), txn, version)
                 if txns:
                     out["txns"] = txns
                 # pins ride every swap untouched (a commit that
@@ -531,69 +475,24 @@ class IndexStore:
                 if lock_token is not None \
                         and not self._lock_owned(lock_token):
                     continue
+                # An ambiguous write — a lost CAS that may be our own
+                # landed write (S3 500/503 applied server-side), or a
+                # rename-mode swap whose lock was stolen mid-write —
+                # MUST be resolved before retrying: a blind retry
+                # would make fold_dirs RENAME an already-live
+                # committed dir (dangling the published dirs entry)
+                # and refold meta/txns a second time.
                 try:
                     io.write(out, seq)
                 except CommitConflict:
-                    # Either a rival really won the CAS, or OUR write
-                    # landed but its success reply was lost (S3 500/503
-                    # with the PUT applied server-side: the adapter's
-                    # retry sees 412 from our own object).  The two
-                    # MUST be told apart before retrying: a blind
-                    # retry after an ambiguous success would make
-                    # fold_dirs RENAME the already-live committed dir
-                    # (dangling the published dirs entry) and refold
-                    # meta/txns a second time.  Same resolution as the
-                    # stolen-lock branch: re-read the head; if it is
-                    # our write — or ``applied(cur)`` says our effect
-                    # survives in the ancestry — the commit stands.
-                    cur = None
-                    for attempt in range(5):
-                        try:
-                            cur, _ = io.read_versioned()
-                            break
-                        except OSError:
-                            time.sleep(0.01 * (attempt + 1))
-                    if cur is None:
-                        # cannot tell success from loss; a retry
-                        # could rename a live dir — stop here, dir
-                        # left in place (the commit-path contract)
-                        raise CommitOutcomeUnknown(
-                            f"manifest head unreadable after a "
-                            f"conflicted write under {self.root}; "
-                            f"commit outcome unknown")
-                    if cur == out or (applied is not None
-                                      and applied(cur)):
-                        return
-                    continue  # genuine lost CAS: re-derive
-                if (isinstance(io, RenameManifestIO)
-                        and lock_token is not None
-                        and not self._lock_owned(lock_token)):
-                    # stolen mid-write: did our pointer swap survive?
-                    # The head is a single pointer file, so an OSError
-                    # here is retried in place — `continue` would let
-                    # the next iteration's fold_dirs RENAME the
-                    # committed dir while the live manifest may still
-                    # reference its current name (ADVICE round 10);
-                    # only renumber once the head is confirmed
-                    # readable and confirmed clobbered.
-                    cur = None
-                    for attempt in range(5):
-                        try:
-                            cur, _ = io.read_versioned()
-                            break
-                        except OSError:
-                            time.sleep(0.01 * (attempt + 1))
-                    if cur is None:
-                        raise CommitOutcomeUnknown(
-                            f"manifest head unreadable after a "
-                            f"stolen-lock write under {self.root}; "
-                            f"commit outcome unknown — dir left "
-                            f"in place")
-                    if cur == out or (applied is not None
-                                      and applied(cur)):
-                        return  # our write is (in) the ancestry
-                    continue    # clobbered by the thief: redo
-                return
+                    ambiguous = True
+                else:
+                    ambiguous = (isinstance(io, RenameManifestIO)
+                                 and lock_token is not None
+                                 and not self._lock_owned(lock_token))
+                if not ambiguous or mio.write_landed(io, out, applied):
+                    return  # our write is (in) the ancestry
+                # a rival won the CAS / the thief clobbered us: redo
         raise CommitConflict(
             f"manifest CAS lost {max_retries} times under {self.root}")
 
@@ -613,8 +512,15 @@ class IndexStore:
     def txn_version(self, app_id: str) -> int | None:
         """Last epoch committed for ``app_id`` — None if never seen
         (or evicted from the bounded tag map)."""
-        v = self.read_manifest().get("txns", {}).get(app_id)
-        return int(v[0]) if v is not None else None
+        return mio.txn_version(self.read_manifest().get("txns", {}),
+                               app_id)
+
+    def replayed(self, txn: tuple[str, int] | None) -> bool:
+        """Whether the streaming epoch ``txn = (app_id, epoch)`` already
+        committed here — a replay the caller skips.  None never is
+        (and reads no manifest)."""
+        return txn is not None and mio.replayed(
+            self.read_manifest().get("txns", {}), txn)
 
     def tag(self, txn: tuple[str, int] | None = None,
             meta: dict | None = None, meta_fn=None,
@@ -746,9 +652,10 @@ class IndexStore:
 
     # -- GC ------------------------------------------------------------------
     def gc(self, include_stage: bool = False) -> None:
-        """Unlink dereferenced version dirs (grace-stamped, the
-        matrel._gc contract).  Never touches live dirs or version
-        dirs numbered above the manifest version (in-flight commits).
+        """Unlink dereferenced version dirs (grace-stamped,
+        ``manifestio.reclaim``).  Never touches live or pinned dirs or
+        version dirs numbered above the manifest version (in-flight
+        commits).
 
         CONCURRENCY CONTRACT: ``gc_grace_seconds=0`` asserts no
         concurrent readers OR committers.  A CAS-losing committer's
@@ -767,32 +674,19 @@ class IndexStore:
         live = set(m["dirs"])
         for rec in m.get("pins", {}).values():
             live.update(rec["dirs"])  # pinned snapshots never reclaimed
-        now = time.time()
-        for entry in os.listdir(self.root):
-            path = os.path.join(self.root, entry)
-            if not os.path.isdir(path) or entry in live:
-                continue
+
+        def doomed(entry: str) -> bool:
+            if entry in live or not os.path.isdir(
+                    os.path.join(self.root, entry)):
+                return False
             vm = _VDIR_RE.match(entry)
-            if vm is not None and int(vm.group(1)) > m["version"]:
-                continue  # in-flight commit by a concurrent writer
             if vm is None:
-                if not (include_stage and entry.startswith(".stage-")):
-                    continue
-            if self.gc_grace_seconds > 0:
-                marker = os.path.join(path, ".unref_ts")
-                try:
-                    with open(marker) as f:
-                        unref_at = float(f.read().strip() or now)
-                except OSError:
-                    try:
-                        with open(marker, "w") as f:
-                            f.write(repr(now))
-                    except OSError:
-                        pass
-                    continue  # grace starts now; delete on a later pass
-                if now - unref_at < self.gc_grace_seconds:
-                    continue  # possibly still scanned
-            shutil.rmtree(path, ignore_errors=True)
+                return include_stage and entry.startswith(".stage-")
+            # above the manifest version: a concurrent in-flight commit
+            return int(vm.group(1)) <= m["version"]
+
+        mio.reclaim(self.root, [e for e in os.listdir(self.root)
+                                if doomed(e)], self.gc_grace_seconds)
 
 
 def open_index(root: str, gc_grace_seconds: float = 60.0) -> IndexStore:

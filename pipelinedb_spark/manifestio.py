@@ -1,5 +1,11 @@
 """Pluggable manifest-commit strategies for the snapshot stores
-(matrel.MatrelStore, indexstore.IndexStore).
+(matrel.MatrelStore, indexstore.IndexStore), and the store rules both
+share: sticky format resolution (:func:`store_io`), the dereference
+grace (:func:`reclaim`), the bounded replay-tag map
+(:func:`fold_txns`, :func:`txn_version`, :func:`replayed`) and the
+ambiguous-write check (:func:`write_landed`).  Each rule is written
+once here, so one deployment flip (:data:`DEFAULT_MANIFEST_FORMAT`)
+moves both stores.
 
 Both stores publish every mutation through ONE manifest write — the
 transaction-commit role PipelineDB gets from Postgres
@@ -40,11 +46,23 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import tempfile
 import time
 
 CONDPUT_DIR = "_manifests"
 _SEQ_RE = re.compile(r"^m(\d{20})\.json$")
+# manifest strategy for NEW stores of both kinds ("rename" = os.replace
+# pointer swap, posix-atomic; "condput" = numbered CAS objects, the
+# object-storage shape); existing stores are sticky to the layout they
+# were created with.  One flip moves matrels and index stores together.
+DEFAULT_MANIFEST_FORMAT = "rename"
+# replay-tag retention: manifests keep the txn tags of the most
+# recently active sources only (a source idle for 64 commits has no
+# in-flight replay to detect)
+MAX_TXN_SOURCES = 64
+# dereference-time grace stamp (dot-prefixed: Spark listings skip it)
+_UNREF_MARKER = ".unref_ts"
 
 
 class LocalFSObjectClient:
@@ -302,6 +320,15 @@ class CommitConflict(RuntimeError):
     their staged output (replace-commits derived from stale dirs)."""
 
 
+class CommitOutcomeUnknown(RuntimeError):
+    """An ambiguous manifest write (lost CAS reply, stolen lock) was
+    followed by a head that stayed unreadable through the bounded
+    re-reads: the write may or may not be the live ancestry, so the
+    caller must not retry or rename anything it published (a retry
+    could double-apply; a rename could dangle a live manifest entry).
+    Published dirs are left in place for the manifest to decide."""
+
+
 class RenameManifestIO:
     """Single pointer file, atomically swapped with ``os.replace``.
     ``base_seq`` is accepted for interface parity and ignored —
@@ -533,21 +560,151 @@ class CondPutManifestIO:
 
 
 def resolve_manifest_io(root: str, filename: str,
-                        fmt: str | None, default: str):
+                        fmt: str | None = None, default: str | None = None):
     """Sticky format resolution: an existing store keeps whatever
     layout it was created with (mixing formats in one store would
-    give two competing pointers); a fresh root uses ``fmt`` or the
-    module default."""
+    give two competing pointers); a fresh root uses ``fmt``, else
+    ``default``, else :data:`DEFAULT_MANIFEST_FORMAT`."""
     condput = CondPutManifestIO(root)
     rename = RenameManifestIO(root, filename)
     if condput.exists() or os.path.isdir(condput.dir):
         return condput
     if rename.exists():
         return rename
-    eff = fmt or default
+    eff = fmt or default or DEFAULT_MANIFEST_FORMAT
     if eff == "condput":
         return condput
     if eff == "rename":
         return rename
     raise ValueError(f"unknown manifest format {eff!r} "
                      "(expected 'rename' or 'condput')")
+
+
+# -- the store rules both snapshot stores share ------------------------------
+def store_io(store, root: str, filename: str):
+    """``store``'s manifest IO, memoized on ``store._manifest_io`` once
+    the store EXISTS on disk: format resolution is sticky for the
+    store's whole life, and the condput instance carries the head-seq
+    probe cache — re-resolving per read would re-LIST for exists() and
+    discard it.  A resolution made against an empty root is a default,
+    not a sticky fact, so it is not memoized: freezing it would blind
+    an exists()-polling reader to another process initializing the
+    root in the other format.  ``store.manifest_format`` (if set)
+    picks the format of a fresh root."""
+    io = getattr(store, "_manifest_io", None)
+    if io is None:
+        io = resolve_manifest_io(root, filename,
+                                 getattr(store, "manifest_format", None))
+        if io.exists():
+            store._manifest_io = io
+    return io
+
+
+def write_landed(io, out: dict, applied=None) -> bool:
+    """Did an ambiguous manifest write of ``out`` land?  Ambiguous: a
+    CommitConflict that may be our OWN write (an S3 500/503 whose PUT
+    applied server-side; the retry sees 412 from our object), or a
+    rename-mode swap made on a lock stolen mid-write.  Re-reads the
+    head — retrying in place while it is unreadable, since a retry
+    that re-derives could double-apply or rename a published dir —
+    and returns whether it is our write, or ``applied(head)`` says our
+    effect survives in its ancestry.  Raises
+    :class:`CommitOutcomeUnknown` when the head stays unreadable."""
+    for attempt in range(5):
+        try:
+            cur, _ = io.read_versioned()
+            break
+        except OSError:
+            time.sleep(0.01 * (attempt + 1))
+    else:
+        raise CommitOutcomeUnknown(
+            f"manifest head unreadable after an ambiguous write under "
+            f"{io.root}; commit outcome unknown — dirs left in place")
+    return cur == out or (applied is not None and applied(cur))
+
+
+def reclaim(root: str, doomed, grace_seconds: float) -> None:
+    """Stamp-then-delete the dereferenced dirs ``doomed`` (names under
+    ``root``) — the retention-before-vacuum grace of both stores.  The
+    grace clock starts at DEREFERENCE time, not dir creation (a dir can
+    leave the manifest long after it was written, and the reader at
+    risk planned against the manifest just before the swap): the first
+    pass that finds a dir doomed stamps a marker inside it and leaves
+    the files; a later pass deletes the dir once the stamp is older
+    than ``grace_seconds``.  A grace of 0 deletes at once (the caller
+    declares no concurrent readers).  Which dirs are doomed — live,
+    pinned, version tail, in flight — is each store's own rule."""
+    now = time.time()
+    for entry in doomed:
+        path = os.path.join(root, entry)
+        if grace_seconds > 0:
+            marker = os.path.join(path, _UNREF_MARKER)
+            try:
+                with open(marker) as f:
+                    unref_at = float(f.read().strip() or now)
+            except OSError:
+                try:
+                    with open(marker, "w") as f:
+                        f.write(repr(now))
+                except OSError:
+                    pass
+                continue  # grace starts now; delete on a later pass
+            if now - unref_at < grace_seconds:
+                continue  # possibly still scanned
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def clear_reclaim_stamp(path: str) -> None:
+    """Drop a grace stamp from a dir being published: a stamp a
+    pre-commit GC pass left on a stage dir must not ride into the
+    committed dir, or a LATER dereference would skip its grace."""
+    try:
+        os.remove(os.path.join(path, _UNREF_MARKER))
+    except OSError:
+        pass
+
+
+def fold_txns(txns: dict, txn, version: int) -> dict:
+    """The replay-tag map after a commit at manifest ``version``.
+    ``txn`` is one ``(app_id, ver)`` tag or a dict of them (a
+    multi-source pending union); tags ride the SAME atomic manifest
+    swap as the data they cover, so replay detection cannot disagree
+    with the committed state, and versions only move forward.  Entries
+    are ``[ver, manifest_version_touched]`` so the map stays BOUNDED:
+    app ids embed the checkpoint path, so every re-attachment with a
+    new checkpoint mints a fresh entry — only the
+    :data:`MAX_TXN_SOURCES` most recently touched are kept.  Legacy
+    plain-int entries are upgraded in the same pass, stamped with THIS
+    version (unstamped they would sort least-recent and be evicted in
+    arbitrary order while their sources are still active)."""
+    txns = dict(txns)
+    if txn is None:
+        return txns
+    for app, ver in (txn.items() if isinstance(txn, dict) else [txn]):
+        prev = txn_version(txns, app)
+        txns[app] = [max(int(ver), -1 if prev is None else prev), version]
+    txns = {a: (v if isinstance(v, list) else [int(v), version])
+            for a, v in txns.items()}
+    if len(txns) > MAX_TXN_SOURCES:
+        txns = dict(sorted(txns.items(), key=lambda kv: kv[1][1],
+                           reverse=True)[:MAX_TXN_SOURCES])
+    return txns
+
+
+def replayed(txns: dict, txn) -> bool:
+    """Has every ``(app_id, ver)`` in ``txn`` (one pair or a dict of
+    them) already committed per the replay-tag map ``txns``?  An empty
+    or None ``txn`` is never a replay."""
+    pairs = txn.items() if isinstance(txn, dict) else [txn] if txn else []
+    return bool(pairs) and all(
+        (done := txn_version(txns, app)) is not None and int(ver) <= done
+        for app, ver in pairs)
+
+
+def txn_version(txns: dict, app_id: str) -> int | None:
+    """Last version committed for ``app_id`` in a replay-tag map —
+    None if never seen (or evicted); reads legacy plain-int entries."""
+    v = txns.get(app_id)
+    if isinstance(v, list):
+        v = v[0]
+    return int(v) if v is not None else None

@@ -17,6 +17,11 @@ merges (``src/pipeline_query.c:1786-1803``, ``src/combiner.c:399``,
 * versioned directories + an atomically-replaced MANIFEST give readers
   snapshot isolation and make merges idempotent on retry (the Spark
   checkpoint analog of the reference's at-least-once combiner commits).
+
+The rules this store shares with the index store (indexstore.py) —
+manifest format resolution and its deployment default, the GC
+dereference grace, the bounded replay-tag map and the ambiguous-write
+check — are written once, in manifestio.py.
 """
 
 from __future__ import annotations
@@ -29,18 +34,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .manifestio import CommitConflict, resolve_manifest_io
+from . import manifestio as mio
+# re-exported for readers; assigning it here flips nothing — the
+# deployment flip is manifestio.DEFAULT_MANIFEST_FORMAT
+from .manifestio import DEFAULT_MANIFEST_FORMAT  # noqa: F401
+from .manifestio import CommitConflict
 
 BUCKET_COL = "__bucket"
-# manifest strategy for NEW stores ("rename" = os.replace pointer
-# swap, posix-atomic; "condput" = numbered CAS objects, the
-# object-storage shape — see manifestio.py); existing stores are
-# sticky to the layout they were created with
-DEFAULT_MANIFEST_FORMAT = "rename"
-# replay-detection retention: manifests keep the txn tags of the most
-# recently active sources only (a source idle for 64 attachments has
-# no in-flight replay to detect)
-MAX_TXN_SOURCES = 64
 
 
 def _du(path: str) -> int:
@@ -134,8 +134,7 @@ class MatrelStore:
         m = self._read_manifest()
         for b in doomed:
             m["buckets"].pop(str(b), None)
-        ref = {os.path.relpath(p, self.dir).split(os.sep)[0]
-               for p in m["buckets"].values()}
+        ref = self._referenced_dirs(m)
         m["dirs"] = {d: i for d, i in m.get("dirs", {}).items() if d in ref}
         self._write_manifest(m)
         # keep_last=0: a bucket drop dereferences dirs regardless of
@@ -153,47 +152,41 @@ class MatrelStore:
     # condput mode a violated single-writer contract surfaces as
     # CommitConflict instead of a silently-lost pointer.
     def _mio(self):
-        # memoized: format resolution is sticky for the store's whole
-        # life by design, and the condput IO instance carries the
-        # head-seq probe cache (manifestio.py) — re-resolving per read
-        # would both re-LIST for exists() and discard that cache
-        io = getattr(self, "_mio_inst", None)
-        if io is None:
-            io = resolve_manifest_io(self.dir, "MANIFEST",
-                                     getattr(self, "manifest_format",
-                                             None),
-                                     DEFAULT_MANIFEST_FORMAT)
-            # memoize only once the store EXISTS on disk: a resolution
-            # made against an empty root is a default, not a sticky
-            # fact — freezing it would blind an exists()-polling
-            # reader to another process initializing the root in the
-            # other format (round-13 review)
-            if io.exists():
-                self._mio_inst = io
-        return io
+        return mio.store_io(self, self.dir, "MANIFEST")
 
     def _read_manifest(self) -> dict:
         m, self._last_seq = self._mio().read_versioned()
         return m
 
     def _write_manifest(self, m: dict) -> None:
+        io = self._mio()
         try:
-            self._mio().write(m, getattr(self, "_last_seq", 0))
+            io.write(m, getattr(self, "_last_seq", 0))
         except CommitConflict:
-            # Condput mode, ambiguous success (S3 500/503 whose PUT
-            # landed server-side: the adapter's retry sees 412 from
-            # our OWN object → CommitConflict).  The store is
-            # single-writer, so the only manifest that can own our
-            # seq is our own write — re-read and compare; propagating
-            # a conflict for a DURABLE commit would make the engine
-            # retry the merge and double-apply the batch.
-            # (isinstance, not name-matching — ADVICE round 11: a
-            # same-named unrelated exception must not be swallowed
-            # into this recovery path, and a subclass must not
-            # escape it.)
-            cur, _seq = self._mio().read_versioned()
-            if cur != m:
+            # Condput mode, ambiguous success: the store is
+            # single-writer, so the only manifest that can own our seq
+            # is our own write; propagating a conflict for a DURABLE
+            # commit would make the engine retry the merge and
+            # double-apply the batch.
+            if not mio.write_landed(io, m):
                 raise  # single-writer contract actually violated
+
+    def _vdir(self, path: str) -> str:
+        """Version-dir name of a manifest bucket path."""
+        return os.path.relpath(path, self.dir).split(os.sep)[0]
+
+    def _referenced_dirs(self, m: dict | None = None,
+                         pins: bool = False) -> set[str]:
+        """Version dirs the manifest ``m`` (default: the current one)
+        references — and its pins too, if ``pins``."""
+        if m is None:
+            m = self._read_manifest()
+        live = {self._vdir(p) for p in m["buckets"].values()}
+        if pins:
+            for rec in m.get("pins", {}).values():
+                live.update(p.split(os.sep)[0]  # stored relative
+                            for p in rec["buckets"].values())
+        return live
 
     # -- read --------------------------------------------------------------
     def is_empty(self) -> bool:
@@ -237,9 +230,8 @@ class MatrelStore:
         df = df.filter(F.col(BUCKET_COL).isin([int(b) for b in entries]))
         if len(paths) == 1:
             return df
-        ver = lambda p: os.path.relpath(p, self.dir).split(os.sep)[0]
         valid = self.spark.createDataFrame(
-            [(ver(p), int(b)) for b, p in entries.items()],
+            [(self._vdir(p), int(b)) for b, p in entries.items()],
             f"__v string, {BUCKET_COL} bigint")
         # Anchor to the version dir that directly CONTAINS the file
         # (packed version dirs are flat): a bare /(v\d+)/ would take the
@@ -328,10 +320,15 @@ class MatrelStore:
         a (source, version) tag rides the commit's atomic manifest
         swap, so a replayed source batch can be detected and skipped
         instead of double-merged)."""
-        v = self._read_manifest().get("txns", {}).get(app_id)
-        if isinstance(v, list):   # [ver, manifest_version_touched]
-            v = v[0]
-        return int(v) if v is not None else None
+        return mio.txn_version(self._read_manifest().get("txns", {}),
+                               app_id)
+
+    def replayed(self, txn: tuple[str, int] | dict | None) -> bool:
+        """Has every ``(source app id, version)`` in ``txn`` (one pair
+        or an {app_id: version} dict) already committed here?  None is
+        never a replay (and reads no manifest)."""
+        return bool(txn) and mio.replayed(
+            self._read_manifest().get("txns", {}), txn)
 
     def merge(self, delta: DataFrame, group_cols: list[str],
               merge_agg_fn,
@@ -409,10 +406,6 @@ class MatrelStore:
         """Replace the whole matrel (truncate+load / combine_table)."""
         states = states.withColumn(BUCKET_COL, self.bucket_expr(group_cols))
         self._commit(states, None, full=True)
-
-    def _referenced_dirs(self) -> set[str]:
-        return {os.path.relpath(p, self.dir).split(os.sep)[0]
-                for p in self._read_manifest()["buckets"].values()}
 
     def compact(self) -> int:
         """Rewrite every live row into one fresh packed version and
@@ -529,8 +522,7 @@ class MatrelStore:
         # trigger: a dir's live fraction decays as later versions
         # rewrite its buckets; bytes×(1 − live/written) estimates dead
         # bytes without reading any parquet
-        ref_dirs = {os.path.relpath(p, self.dir).split(os.sep)[0]
-                    for p in new_buckets.values()}
+        ref_dirs = {self._vdir(p) for p in new_buckets.values()}
         dirs = {d: info for d, info in m.get("dirs", {}).items()
                 if d in ref_dirs}
         dirs[f"v{version}"] = {"bytes": _du(vdir),
@@ -543,38 +535,7 @@ class MatrelStore:
                if k not in ("version", "buckets", "dirs", "txns")}
         out.update({"version": version, "buckets": new_buckets,
                     "dirs": dirs})
-        txns = dict(m.get("txns", {}))
-        if txn is not None:
-            # (app_id, version) tags ride the SAME atomic manifest
-            # swap as the data they cover — replay detection cannot
-            # disagree with the committed state.  A dict covers a
-            # multi-source pending union; versions only move forward.
-            # Entries are [ver, manifest_version_touched] so the map
-            # can be BOUNDED: app_id embeds the checkpoint path, so
-            # every re-attachment with a new checkpoint dir mints a
-            # fresh entry that would otherwise be rewritten into
-            # every future manifest forever (ADVICE r7) — keep only
-            # the most recently touched tail.
-            items = txn.items() if isinstance(txn, dict) else [txn]
-            for app, ver in items:
-                prev = txns.get(app)
-                if isinstance(prev, list):
-                    prev = prev[0]
-                txns[app] = [max(int(ver),
-                                 int(prev if prev is not None else -1)),
-                             version]
-            # upgrade any remaining pre-round-8 plain-int entries in
-            # one pass, stamped with THIS version: without a touched
-            # stamp they would sort as least-recent and be evicted in
-            # arbitrary order on the first post-upgrade commit —
-            # losing replay tags for sources that are still active
-            txns = {a: (v if isinstance(v, list) else [int(v), version])
-                    for a, v in txns.items()}
-            if len(txns) > MAX_TXN_SOURCES:
-                def _touched(kv):
-                    return kv[1][1] if isinstance(kv[1], list) else -1
-                txns = dict(sorted(txns.items(), key=_touched,
-                                   reverse=True)[:MAX_TXN_SOURCES])
+        txns = mio.fold_txns(m.get("txns", {}), txn, version)
         if txns:
             out["txns"] = txns
         self._write_manifest(out)
@@ -591,12 +552,9 @@ class MatrelStore:
         m = self._read_manifest()
         live_of: dict[str, int] = {}
         for p in m["buckets"].values():
-            d = os.path.relpath(p, self.dir).split(os.sep)[0]
+            d = self._vdir(p)
             live_of[d] = live_of.get(d, 0) + 1
-        pinned = set()
-        for rec in m.get("pins", {}).values():
-            pinned.update(p.split(os.sep)[0]
-                          for p in rec["buckets"].values())
+        held = self._referenced_dirs(m, pins=True)
         dirs = m.get("dirs", {})
         live = stale = 0
         for entry in os.listdir(self.dir):
@@ -604,7 +562,7 @@ class MatrelStore:
                     not os.path.isdir(os.path.join(self.dir, entry)):
                 continue
             n_live = live_of.get(entry, 0)
-            if n_live == 0 and entry in pinned:
+            if n_live == 0 and entry in held:
                 # retention-held by a pin: not dead bytes — counting
                 # it stale would make maybe_compact() fire every
                 # grace window without ever reclaiming anything.
@@ -643,56 +601,29 @@ class MatrelStore:
         return True
 
     def _gc(self, keep_version: int, keep_last: int = 2) -> None:
-        """Drop version dirs no longer referenced — keeping a small
-        version tail AND a time grace (``gc_grace_seconds``) for
-        in-flight readers whose lazy plans still hold the old paths.
+        """Drop version dirs no longer referenced by the manifest or a
+        pin — keeping a small version tail AND the dereference grace
+        (``gc_grace_seconds``, :func:`manifestio.reclaim`) for
+        in-flight readers whose lazy plans still hold the old paths
+        (a SW step bucket leaves the manifest a whole window after
+        its dir was written)."""
+        live = self._referenced_dirs(pins=True)
 
-        The grace clock starts at DEREFERENCE time, not dir creation:
-        a dir can leave the manifest long after it was written (a SW
-        step bucket expires a whole window later), and the reader at
-        risk is one that planned against the manifest just before the
-        swap.  The first GC pass that finds a dir unreferenced stamps
-        a ``.unref_ts`` marker inside it (dot-prefixed: Spark file
-        listings skip it) and leaves the files; a later pass deletes
-        the dir once the stamp is older than the grace."""
-        m = self._read_manifest()
-        live_dirs = {os.path.relpath(p, self.dir).split(os.sep)[0]
-                     for p in m["buckets"].values()}
-        for rec in m.get("pins", {}).values():
-            live_dirs.update(p.split(os.sep)[0]  # stored relative
-                             for p in rec["buckets"].values())
-        now = time.time()
-        for entry in os.listdir(self.dir):
-            if not entry.startswith("v"):
-                continue
+        def doomed(entry: str) -> bool:
+            if not entry.startswith("v") or entry in live:
+                return False
             try:
                 v = int(entry[1:])
             except ValueError:
-                continue
-            if entry in live_dirs:
-                continue
-            if v > keep_version:
-                # in-flight commit: dir written, manifest not yet
-                # swapped — never eligible regardless of keep_last
-                continue
-            if keep_last and v >= keep_version - keep_last:
-                continue  # version tail (commit-path reader safety)
-            path = os.path.join(self.dir, entry)
-            if self.gc_grace_seconds > 0:
-                marker = os.path.join(path, ".unref_ts")
-                try:
-                    with open(marker) as f:
-                        unref_at = float(f.read().strip() or now)
-                except OSError:
-                    try:
-                        with open(marker, "w") as f:
-                            f.write(repr(now))
-                    except OSError:
-                        pass
-                    continue  # grace starts now; delete on a later pass
-                if now - unref_at < self.gc_grace_seconds:
-                    continue  # possibly still scanned
-            shutil.rmtree(path, ignore_errors=True)
+                return False
+            # above keep_version: in-flight commit (dir written,
+            # manifest not yet swapped), never eligible; the keep_last
+            # tail guards commit-path readers
+            return v <= keep_version and not (
+                keep_last and v >= keep_version - keep_last)
+
+        mio.reclaim(self.dir, [e for e in os.listdir(self.dir)
+                               if doomed(e)], self.gc_grace_seconds)
 
     def gc_sweep(self) -> None:
         """Re-run GC without a commit (background maintenance): deletes
@@ -721,7 +652,7 @@ class MatrelStore:
         # the memoized manifest IO is bound to the OLD directory path
         # (and, in condput mode, carries a probe cache for it) — drop
         # it so the next access re-resolves against the moved dir
-        self._mio_inst = None
+        self._manifest_io = None
         m = self._read_manifest()
         m["buckets"] = {b: os.path.join(new_dir, os.path.relpath(p, old_dir))
                         for b, p in m["buckets"].items()}

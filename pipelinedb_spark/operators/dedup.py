@@ -852,10 +852,8 @@ def lsh_index_append(spark, path: str, new_docs: DataFrame,
     from ..indexstore import open_index
 
     store = open_index(path)
-    if txn is not None:
-        done = store.txn_version(txn[0])
-        if done is not None and txn[1] <= done:
-            return False
+    if store.replayed(txn):
+        return False
     if new_docs.isEmpty():      # empty epoch: tag only
         store.tag(txn=txn)
         return True

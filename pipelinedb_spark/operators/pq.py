@@ -338,10 +338,8 @@ def ivfpq_append(spark, path: str, new_vectors: DataFrame,
     from .similarity import _read_meta
 
     store = IndexStore(path)
-    if txn is not None:
-        done = store.txn_version(txn[0])
-        if done is not None and txn[1] <= done:
-            return 0  # replayed streaming epoch: already committed
+    if store.replayed(txn):
+        return 0  # replayed streaming epoch: already committed
     if new_vectors.isEmpty():   # empty epoch: tag only (ivf_append)
         store.tag(txn=txn)
         return 0

@@ -320,10 +320,8 @@ def bm25_append(spark, path: str, new_docs: DataFrame,
     from ..indexstore import open_index
 
     store = open_index(path)
-    if txn is not None:
-        done = store.txn_version(txn[0])
-        if done is not None and txn[1] <= done:
-            return 0
+    if store.replayed(txn):
+        return 0
     if new_docs.isEmpty():
         store.tag(txn=txn)
         return 0

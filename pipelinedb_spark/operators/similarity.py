@@ -850,10 +850,8 @@ def ivf_append(spark, path: str, new_vectors: DataFrame,
     from pyspark.sql import Observation
 
     store = IndexStore(path)
-    if txn is not None:
-        done = store.txn_version(txn[0])
-        if done is not None and txn[1] <= done:
-            return 0
+    if store.replayed(txn):
+        return 0
     if new_vectors.isEmpty():
         # empty epoch: tag only — no encode job, and no empty version
         # dir (one per empty epoch would bloat later probes' unions).

@@ -402,10 +402,8 @@ def span_index_append(spark, path: str, new_docs: DataFrame,
     from ..indexstore import open_index
 
     store = open_index(path)
-    if txn is not None:
-        done = store.txn_version(txn[0])
-        if done is not None and txn[1] <= done:
-            return False  # replayed epoch: already committed
+    if store.replayed(txn):
+        return False  # replayed epoch: already committed
     if new_docs.isEmpty():      # empty epoch: tag only
         store.tag(txn=txn)
         return True

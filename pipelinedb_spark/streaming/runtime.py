@@ -69,15 +69,21 @@ def _claim_stream(ctx: PipelineContext, stream: str) -> dict:
     return active
 
 
-def _epoch_path(ctx: PipelineContext, stream: str, checkpoint: str) -> str:
-    """Replay marker, keyed by (stream, checkpoint location): epoch ids
-    are scoped to one streaming query's checkpoint, so a fresh
-    checkpoint dir must get a fresh marker."""
+def _checkpoint_key(checkpoint: str) -> str:
+    """Short stable id of a checkpoint location: epoch ids are scoped
+    to one streaming query's checkpoint, so the replay marker and the
+    per-view txn tags are both keyed by it."""
     import hashlib
+    return hashlib.md5(os.path.abspath(checkpoint).encode()).hexdigest()[:12]
+
+
+def _epoch_path(ctx: PipelineContext, stream: str, checkpoint: str) -> str:
+    """Replay marker, keyed by (stream, checkpoint location) — a fresh
+    checkpoint dir gets a fresh marker."""
     d = os.path.join(ctx.root, "epochs")
     os.makedirs(d, exist_ok=True)
-    ck = hashlib.md5(os.path.abspath(checkpoint).encode()).hexdigest()[:12]
-    return os.path.join(d, f"{stream}.{ck}.last_epoch")
+    return os.path.join(d, f"{stream}.{_checkpoint_key(checkpoint)}"
+                           ".last_epoch")
 
 
 def _foreach_batch(ctx: PipelineContext, stream: str, checkpoint: str,
@@ -108,10 +114,8 @@ def _foreach_batch(ctx: PipelineContext, stream: str, checkpoint: str,
     the downstream view misses that epoch's deltas (previously it
     received deltas computed against a double-merged state, which was
     no better)."""
-    import hashlib
     marker = _epoch_path(ctx, stream, checkpoint)
-    ck = hashlib.md5(os.path.abspath(checkpoint).encode()).hexdigest()[:12]
-    app_id = f"sstream::{stream}::{ck}"
+    app_id = f"sstream::{stream}::{_checkpoint_key(checkpoint)}"
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         if os.path.exists(marker):
@@ -139,6 +143,37 @@ def _foreach_batch(ctx: PipelineContext, stream: str, checkpoint: str,
     return handle
 
 
+def _start(ctx: PipelineContext, stream: str,
+           source: Callable[[], DataFrame], checkpoint_dir: str | None,
+           default_checkpoint: str, trigger_seconds: float | None = None,
+           transform: Callable[[DataFrame], DataFrame] | None = None
+           ) -> StreamAttachment:
+    """The one attach tail: claim the stream, build the ``source``
+    streaming frame, run it through the effectively-once foreachBatch
+    bridge under its checkpoint (``checkpoint_dir``, else
+    ``<root>/checkpoints/<default_checkpoint>``), start the query and
+    register the attachment."""
+    active = _claim_stream(ctx, stream)
+    checkpoint = checkpoint_dir or os.path.join(ctx.root, "checkpoints",
+                                                default_checkpoint)
+    writer = (source().writeStream
+              .foreachBatch(_foreach_batch(ctx, stream, checkpoint,
+                                           transform=transform))
+              .option("checkpointLocation", checkpoint))
+    if trigger_seconds:
+        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+    att = StreamAttachment(ctx, stream, writer.start())
+    active[stream] = att
+    return att
+
+
+def _source_schema(ctx: PipelineContext, stream: str):
+    """The stream's declared schema minus arrival_timestamp, which is
+    stamped at ingest, not read from the source."""
+    schema = ctx.streams[stream].schema
+    return type(schema)([f for f in schema.fields if f.name != ARRIVAL_COL])
+
+
 def attach_file_stream(ctx: PipelineContext, stream: str, source_dir: str,
                        fmt: str = "parquet",
                        checkpoint_dir: str | None = None,
@@ -150,28 +185,18 @@ def attach_file_stream(ctx: PipelineContext, stream: str, source_dir: str,
     CV/transform reading the stream.  ``reader_options`` passes
     source options through (e.g. ``maxFilesPerTrigger`` to bound
     micro-batch size under a backlog)."""
-    sd = ctx.streams[stream]
-    active = _claim_stream(ctx, stream)
-    schema = sd.schema
-    # arrival_timestamp is stamped at ingest, not read from files
-    src_schema = type(schema)([f for f in schema.fields
-                               if f.name != ARRIVAL_COL])
-    reader = (ctx.spark.readStream.schema(src_schema).format(fmt))
-    if fmt == "json":
-        reader = reader.option("multiLine", "false")
-    for k, v in (reader_options or {}).items():
-        reader = reader.option(k, v)
-    stream_df = reader.load(source_dir)
-    checkpoint = checkpoint_dir or os.path.join(ctx.root, "checkpoints", stream)
-    writer = (stream_df.writeStream
-              .foreachBatch(_foreach_batch(ctx, stream, checkpoint))
-              .option("checkpointLocation", checkpoint))
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    query = writer.start()
-    att = StreamAttachment(ctx, stream, query)
-    active[stream] = att
-    return att
+    src_schema = _source_schema(ctx, stream)
+
+    def source():
+        reader = ctx.spark.readStream.schema(src_schema).format(fmt)
+        if fmt == "json":
+            reader = reader.option("multiLine", "false")
+        for k, v in (reader_options or {}).items():
+            reader = reader.option(k, v)
+        return reader.load(source_dir)
+
+    return _start(ctx, stream, source, checkpoint_dir, stream,
+                  trigger_seconds)
 
 
 def kafka_reader_options(bootstrap_servers: str, topic: str,
@@ -231,30 +256,21 @@ def attach_kafka_stream(ctx: PipelineContext, stream: str,
     classpath; this container ships without it, so the attachment
     raises a clear CQError at start instead of an opaque
     ClassNotFoundException."""
-    sd = ctx.streams[stream]
-    active = _claim_stream(ctx, stream)
-    src_schema = type(sd.schema)([f for f in sd.schema.fields
-                                  if f.name != ARRIVAL_COL])
-    checkpoint = checkpoint_dir or os.path.join(
-        ctx.root, "checkpoints", f"kafka_{stream}")
-    opts = kafka_reader_options(bootstrap_servers, topic,
-                                starting_offsets)
-    try:
-        raw = ctx.spark.readStream.format("kafka").options(**opts).load()
-    except Exception as e:  # connector jar missing / broker unreachable
-        raise CQError(
-            "kafka source unavailable: the spark-sql-kafka connector "
-            f"package is required on the classpath ({e})") from e
-    parsed = kafka_decode(raw, src_schema)
-    writer = (parsed.writeStream
-              .foreachBatch(_foreach_batch(ctx, stream, checkpoint))
-              .option("checkpointLocation", checkpoint))
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    query = writer.start()
-    att = StreamAttachment(ctx, stream, query)
-    active[stream] = att
-    return att
+    src_schema = _source_schema(ctx, stream)
+
+    def source():
+        opts = kafka_reader_options(bootstrap_servers, topic,
+                                    starting_offsets)
+        try:
+            raw = ctx.spark.readStream.format("kafka").options(**opts).load()
+        except Exception as e:  # connector jar missing / broker unreachable
+            raise CQError(
+                "kafka source unavailable: the spark-sql-kafka connector "
+                f"package is required on the classpath ({e})") from e
+        return kafka_decode(raw, src_schema)
+
+    return _start(ctx, stream, source, checkpoint_dir, f"kafka_{stream}",
+                  trigger_seconds)
 
 
 def attach_socket_stream(ctx: PipelineContext, stream: str,
@@ -280,35 +296,15 @@ def attach_socket_stream(ctx: PipelineContext, stream: str,
     protocol would accept such a row; callers that need all-null rows
     should declare a non-nullable discriminator column (an id or
     arrival sequence) in the stream schema."""
-    sd = ctx.streams[stream]
-    active = _claim_stream(ctx, stream)
-    from pyspark.sql import functions as F
-    src_schema = type(sd.schema)([f for f in sd.schema.fields
-                                  if f.name != ARRIVAL_COL])
-    checkpoint = checkpoint_dir or os.path.join(
-        ctx.root, "checkpoints", f"socket_{stream}")
-    raw = (ctx.spark.readStream.format("socket")
-           .option("host", host).option("port", port)
-           .load())
-    parsed = (raw.select(F.from_json(F.col("value"),
-                                     src_schema).alias("r"))
-              .select("r.*"))
-    if src_schema.fields:
-        # malformed lines parse to an all-null struct — drop them
-        # (reference rejects malformed wire inserts per-row)
-        import functools
-        parsed = parsed.filter(functools.reduce(
-            lambda a, b: a | b,
-            [F.col(f.name).isNotNull() for f in src_schema.fields]))
-    writer = (parsed.writeStream
-              .foreachBatch(_foreach_batch(ctx, stream, checkpoint))
-              .option("checkpointLocation", checkpoint))
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    query = writer.start()
-    att = StreamAttachment(ctx, stream, query)
-    active[stream] = att
-    return att
+    src_schema = _source_schema(ctx, stream)
+
+    def source():
+        return kafka_decode(ctx.spark.readStream.format("socket")
+                            .option("host", host).option("port", port)
+                            .load(), src_schema)
+
+    return _start(ctx, stream, source, checkpoint_dir, f"socket_{stream}",
+                  trigger_seconds)
 
 
 _BINARY_FILE_SCHEMA = ("path string, modificationTime timestamp, "
@@ -368,29 +364,21 @@ def attach_archive_stream(ctx: PipelineContext, stream: str,
                       "expected warc, warc_records, or tar")
 
     _ = ctx.streams[stream]  # validates the stream exists
-    active = _claim_stream(ctx, stream)
-    checkpoint = checkpoint_dir or os.path.join(
-        ctx.root, "checkpoints", f"archive_{stream}")
-    reader = (ctx.spark.readStream.format("binaryFile")
-              .schema(_BINARY_FILE_SCHEMA)
-              .option("pathGlobFilter",
-                      "*.warc*" if kind.startswith("warc") else "*.tar*"))
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger",
-                               str(max_files_per_trigger))
-    for k, v in (reader_options or {}).items():
-        reader = reader.option(k, v)
-    raw = reader.load(source_dir)
-    writer = (raw.writeStream
-              .foreachBatch(_foreach_batch(ctx, stream, checkpoint,
-                                           transform=transform))
-              .option("checkpointLocation", checkpoint))
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    query = writer.start()
-    att = StreamAttachment(ctx, stream, query)
-    active[stream] = att
-    return att
+
+    def source():
+        reader = (ctx.spark.readStream.format("binaryFile")
+                  .schema(_BINARY_FILE_SCHEMA)
+                  .option("pathGlobFilter", "*.warc*"
+                          if kind.startswith("warc") else "*.tar*"))
+        if max_files_per_trigger:
+            reader = reader.option("maxFilesPerTrigger",
+                                   str(max_files_per_trigger))
+        for k, v in (reader_options or {}).items():
+            reader = reader.option(k, v)
+        return reader.load(source_dir)
+
+    return _start(ctx, stream, source, checkpoint_dir, f"archive_{stream}",
+                  trigger_seconds, transform=transform)
 
 
 class SWTicker:
@@ -516,16 +504,12 @@ def attach_rate_stream(ctx: PipelineContext, stream: str,
     into the stream's schema via ``value_exprs`` SQL snippets."""
     from pyspark.sql import functions as F
 
-    active = _claim_stream(ctx, stream)
-    src = (ctx.spark.readStream.format("rate")
-           .option("rowsPerSecond", rows_per_second).load())
-    if value_exprs:
-        src = src.select(*[F.expr(e).alias(n) for n, e in value_exprs.items()])
-    checkpoint = os.path.join(ctx.root, "checkpoints", f"rate_{stream}")
-    query = (src.writeStream
-             .foreachBatch(_foreach_batch(ctx, stream, checkpoint))
-             .option("checkpointLocation", checkpoint)
-             .start())
-    att = StreamAttachment(ctx, stream, query)
-    active[stream] = att
-    return att
+    def source():
+        src = (ctx.spark.readStream.format("rate")
+               .option("rowsPerSecond", rows_per_second).load())
+        if value_exprs:
+            src = src.select(*[F.expr(e).alias(n)
+                               for n, e in value_exprs.items()])
+        return src
+
+    return _start(ctx, stream, source, None, f"rate_{stream}")

@@ -86,9 +86,7 @@ def main() -> None:
         # tests/test_s3_boto3_e2e.py::test_engine_cv_lifecycle...)
         sys.path.insert(0, os.path.join(os.path.dirname(
             os.path.dirname(os.path.abspath(__file__))), "tests"))
-        import pipelinedb_spark.indexstore as indexstore_mod
         import pipelinedb_spark.manifestio as mio
-        import pipelinedb_spark.matrel as matrel_mod
         from s3http_fake import S3HttpFake
         os.environ.setdefault("AWS_ACCESS_KEY_ID", "testing")
         os.environ.setdefault("AWS_SECRET_ACCESS_KEY", "testing")
@@ -97,8 +95,7 @@ def main() -> None:
         fake = S3HttpFake()
         list_calls = [0, 0]   # [total logical list() calls, from gc]
         fake.__enter__()
-        matrel_mod.DEFAULT_MANIFEST_FORMAT = "condput"
-        indexstore_mod.DEFAULT_MANIFEST_FORMAT = "condput"
+        mio.DEFAULT_MANIFEST_FORMAT = "condput"
         mio.CLIENT_FACTORY = lambda d: mio.S3ObjectClient(
             "bkt", os.path.abspath(d),
             endpoint_url=fake.endpoint_url, region_name="us-east-1")

@@ -28,7 +28,6 @@ import pytest
 from pyspark.sql import functions as F
 
 import pipelinedb_spark.indexstore as ixs
-import pipelinedb_spark.matrel as mat
 from pipelinedb_spark.indexstore import (CommitConflict, IndexStore,
                                          open_index, read_index)
 from pipelinedb_spark.manifestio import (CONDPUT_DIR, CondPutManifestIO,
@@ -41,8 +40,7 @@ def condput_nonatomic_fs(monkeypatch):
     """Every test in this module: new stores default to condput, and
     os.replace loses atomicity (copy + delete, observable in between)
     — the object-storage filesystem contract."""
-    monkeypatch.setattr(ixs, "DEFAULT_MANIFEST_FORMAT", "condput")
-    monkeypatch.setattr(mat, "DEFAULT_MANIFEST_FORMAT", "condput")
+    monkeypatch.setattr(mio, "DEFAULT_MANIFEST_FORMAT", "condput")
     orig_replace = os.replace
 
     def nonatomic_replace(src, dst, **kw):
@@ -115,15 +113,31 @@ def test_condput_layout_sticky_and_history_pruned(tmp_path):
     assert not os.path.exists(os.path.join(root, "_manifest.json"))
 
 
+def test_one_format_flip_reaches_matrel_and_index_stores(tmp_path,
+                                                         monkeypatch):
+    """The documented deployment flip is ONE module default: setting
+    manifestio's moves new matrels and new index stores together (two
+    per-module defaults once drifted — flipping the matrel's left every
+    index store on rename manifests).  No Spark: store construction
+    and format resolution touch only the filesystem."""
+    monkeypatch.setattr(mio, "DEFAULT_MANIFEST_FORMAT", "condput")
+    ms = MatrelStore(None, str(tmp_path), "cv")
+    assert isinstance(ms._mio(), CondPutManifestIO)
+    s = IndexStore(str(tmp_path / "idx"))
+    s.init_if_needed()
+    assert isinstance(s._io(), CondPutManifestIO)
+    assert not os.path.exists(os.path.join(s.root, "_manifest.json"))
+
+
 def test_condput_rename_store_stays_rename(tmp_path, monkeypatch):
-    monkeypatch.setattr(ixs, "DEFAULT_MANIFEST_FORMAT", "rename")
+    monkeypatch.setattr(mio, "DEFAULT_MANIFEST_FORMAT", "rename")
     root = str(tmp_path / "idx")
     s = IndexStore(root)
     s.init_if_needed()
     _add(s, "a")
     assert os.path.exists(os.path.join(root, "_manifest.json"))
     # later default flips back to condput — layout is sticky
-    monkeypatch.setattr(ixs, "DEFAULT_MANIFEST_FORMAT", "condput")
+    monkeypatch.setattr(mio, "DEFAULT_MANIFEST_FORMAT", "condput")
     s2 = IndexStore(root)
     _add(s2, "b")
     assert len(s2.dirs()) == 2
@@ -609,7 +623,7 @@ def test_lockless_mode_is_a_supported_parameter(tmp_path, objstore):
 
 
 def test_lockless_mode_refuses_rename_format(tmp_path, monkeypatch):
-    monkeypatch.setattr(ixs, "DEFAULT_MANIFEST_FORMAT", "rename")
+    monkeypatch.setattr(mio, "DEFAULT_MANIFEST_FORMAT", "rename")
     s = IndexStore(str(tmp_path / "idx"), gc_grace_seconds=60.0,
                    manifest_format="rename", commit_lock=False)
     with pytest.raises(ValueError, match="condput"):

@@ -6,7 +6,8 @@ blake2b doc_id contract, and the bounded matrel txns map."""
 import pytest
 from pyspark.sql import functions as F
 
-from pipelinedb_spark.matrel import MAX_TXN_SOURCES, MatrelStore
+from pipelinedb_spark.manifestio import MAX_TXN_SOURCES
+from pipelinedb_spark.matrel import MatrelStore
 from pipelinedb_spark.operators.warc import parse_warc_records
 
 

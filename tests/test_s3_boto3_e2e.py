@@ -222,11 +222,9 @@ def test_engine_cv_lifecycle_through_real_botocore(
     mid-stream, which the matrel's single-writer recovery must
     resolve without double-applying the batch.  A view pin rides the
     same object-store manifests."""
-    import pipelinedb_spark.matrel as matrel_mod
     from pipelinedb_spark import PipelineContext
 
-    monkeypatch.setattr(matrel_mod, "DEFAULT_MANIFEST_FORMAT",
-                        "condput")
+    monkeypatch.setattr(mio, "DEFAULT_MANIFEST_FORMAT", "condput")
     monkeypatch.setattr(
         mio, "CLIENT_FACTORY",
         lambda d: _client(fake, prefix=os.path.abspath(d)))
