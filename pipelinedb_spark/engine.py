@@ -20,6 +20,7 @@ via ``foreachBatch`` (see ``streaming/runtime.py``).
 
 from __future__ import annotations
 
+import functools
 import logging
 import os
 import re
@@ -740,85 +741,68 @@ class ContView:
         return changed.select("old", "new", "delta", "delta_states")
 
     # -- reads ---------------------------------------------------------------
-    def _window_states(self, at: float, bucket_ids, read
-                       ) -> DataFrame | None:
-        """In-window states of a SW view at logical time ``at``: under
-        the step-bucketed layout, expired steps are pruned at the
-        MANIFEST (``bucket_ids()`` → ids; their files are never
-        opened); ``read(buckets)`` (None = all) reads the rest, and
-        the exact step filter then trims the one boundary bucket."""
-        cutoff = at - float(self.plan.sw_seconds)
-        tol = float(self.plan.sw_step_seconds)
-        buckets = None
-        if self._time_bucketed:
-            buckets = [b for b in bucket_ids() if b * tol >= cutoff - tol]
-            if not buckets:
-                return None
-        states = read(buckets)
-        if states is None:
-            return None
-        return states.filter(
-            ts_epoch(F.col(STEP_COL)) >= F.lit(cutoff) - tol)
-
-    def sw_states(self, at: float | None = None) -> DataFrame | None:
-        """In-window matrel states of a SW view (window at ``at``,
-        default now)."""
-        return self._window_states(
-            at if at is not None else time.time(),
-            self.matrel.bucket_ids, self.matrel.read)
-
-    def read(self, at: float | None = None) -> DataFrame:
-        if self.plan.sw_column is not None:
-            states = self.sw_states(at)
+    def states(self, at: float | None = None, pin: str | None = None,
+               window: bool = True) -> DataFrame:
+        """The matrel states a read sees — the one states rule of
+        every view read.  ``pin`` picks a named pin's states
+        (MatrelStore.pin), else the live matrel's.  A SW view keeps
+        only the steps in its window at ``at`` (default now; a pin's
+        recorded ``at`` for a pin) unless ``window`` is False: under
+        the step-bucketed layout expired steps are pruned at the
+        MANIFEST (their files are never opened), and the exact step
+        filter then trims the one boundary bucket.  No states read as
+        an empty frame of the state schema."""
+        read = self.matrel.read
+        if pin is not None:
+            rec = self.matrel.pins().get(pin)
+            if rec is None:
+                raise KeyError(
+                    f"no pin {pin!r} on view {self.matrel.name}")
+            at = float(rec["at"])
+            read = functools.partial(self.matrel.read_pinned, pin)
+        if self.plan.sw_column is None or not window:
+            states = read()
         else:
-            states = self.matrel.read()
-        if states is None:
-            empty = self.ctx.spark.createDataFrame([], self._overlay_schema())
-            return empty
-        return self.finalize(states)
+            cutoff = (time.time() if at is None else at) \
+                - float(self.plan.sw_seconds)
+            tol = float(self.plan.sw_step_seconds)
+            buckets = None
+            if self._time_bucketed:
+                ids = (self.matrel.bucket_ids() if pin is None
+                       else map(int, rec["buckets"]))
+                buckets = [b for b in ids if b * tol >= cutoff - tol]
+            states = read(buckets) if buckets != [] else None
+            if states is not None:
+                states = states.filter(
+                    ts_epoch(F.col(STEP_COL)) >= F.lit(cutoff) - tol)
+        return self._probe() if states is None else states
 
-    def read_pinned(self, pin_name: str) -> DataFrame:
-        """Finalized rows of a named matrel pin (MatrelStore.pin): the
-        view exactly as it stood at pin time, reproducible forever.
-        SW views evaluate their window cutoff at the pin's recorded
-        ``at`` instant — the same rows on every later read, even after
-        the live window has slid past them and the reaper dropped
-        their step buckets (pinned dirs are GC-exempt)."""
-        states = self.pinned_states(pin_name)
-        if states is None:
-            return self.ctx.spark.createDataFrame(
-                [], self._overlay_schema())
-        return self.finalize(states)
+    def read(self, at: float | None = None,
+             pin: str | None = None) -> DataFrame:
+        """Finalized overlay rows of :meth:`states`.  A pinned read is
+        the view exactly as it stood at pin time, reproducible
+        forever: a SW view evaluates its window at the pin's instant,
+        so the rows stay the same after the live window slid past
+        them and the reaper dropped their step buckets (pinned dirs
+        are GC-exempt)."""
+        return self.finalize(self.states(at, pin))
 
-    def pinned_states(self, pin_name: str) -> DataFrame | None:
-        """A pin's matrel states, SW window cutoff evaluated at the
-        pin's recorded ``at`` instant (shared by :meth:`read_pinned`
-        and the pinned ``combine_read``)."""
-        rec = self.matrel.pins().get(pin_name)
-        if rec is None:
-            raise KeyError(
-                f"no pin {pin_name!r} on view {self.matrel.name}")
-        if self.plan.sw_column is None:
-            return self.matrel.read_pinned(pin_name)
-        return self._window_states(
-            float(rec["at"]), lambda: [int(b) for b in rec["buckets"]],
-            lambda buckets: self.matrel.read_pinned(pin_name, buckets))
-
-    def _overlay_schema(self) -> T.StructType:
+    def _probe(self) -> DataFrame:
+        """The worker over an empty batch: a matrel-shaped frame with
+        no rows."""
         empty = self.ctx.empty_stream_df(self.plan.stream)
         pre = self.ctx._worker_input(self.plan, self.plan.stream, empty)
-        probe = self.worker(pre)
-        probe = probe.withColumn(BUCKET_COL, F.lit(0))
-        return self.finalize(probe, recombine=False).schema
+        return self.worker(pre).withColumn(BUCKET_COL, F.lit(0)).limit(0)
+
+    def _overlay_schema(self) -> T.StructType:
+        return self.finalize(self._probe(), recombine=False).schema
 
     def _state_schema(self) -> T.StructType:
         """Schema of the matrel partial-state columns (the fields of
         the osrel's hidden delta_states struct)."""
-        empty = self.ctx.empty_stream_df(self.plan.stream)
-        pre = self.ctx._worker_input(self.plan, self.plan.stream, empty)
-        probe = self.worker(pre)
-        return T.StructType([f for f in probe.schema.fields
-                             if f.name not in set(self._group_cols)])
+        keys = set(self._group_cols) | {BUCKET_COL}
+        return T.StructType([f for f in self._probe().schema.fields
+                             if f.name not in keys])
 
     def key_cols(self) -> list[str]:
         """User-visible group columns of the overlay output."""
@@ -982,35 +966,12 @@ class PreparedInsert:
             self.ctx._prepared.remove(self)
 
 
-def _from_relations(from_clause: str) -> list[str]:
-    """Base relation identifiers of a FROM clause: split on top-level
-    commas and JOIN keywords, take each fragment's leading identifier,
-    and RECURSE into (SELECT ...) subqueries — their FROM relations
-    count (``SELECT combine(x) FROM (SELECT * FROM cv) t`` must find
-    cv).  Used so combine()-rewrite CV detection matches RELATIONS
-    only, never column references."""
-    from pipelinedb_spark.analyzer import split_clauses, split_top_level
-    rels: list[str] = []
-    for m in re.finditer(r"(?i)\(\s*select\b", from_clause):
-        depth, i = 1, m.start() + 1
-        while i < len(from_clause) and depth:
-            if from_clause[i] == "(":
-                depth += 1
-            elif from_clause[i] == ")":
-                depth -= 1
-            i += 1
-        sub = split_clauses(from_clause[m.start() + 1:i - 1])
-        if "FROM" in sub:
-            rels.extend(_from_relations(sub["FROM"]))
-    for item in split_top_level(from_clause):
-        frags = re.split(
-            r"(?i)\b(?:natural\s+)?(?:left|right|full|inner|cross)?"
-            r"\s*(?:outer\s+)?join\b", item)
-        for frag in frags:
-            m = re.match(r"\s*([A-Za-z_][\w.]*)", frag)
-            if m:
-                rels.append(m.group(1))
-    return rels
+def _named(names: dict, rel: str) -> str | None:
+    """The one of ``names`` that relation ``rel`` denotes, matched
+    case-insensitively as Spark resolves identifiers."""
+    if rel in names:
+        return rel
+    return next((n for n in names if n.lower() == rel.lower()), None)
 
 
 def _combine_calls(text: str):
@@ -1633,6 +1594,7 @@ class PipelineContext:
         cv = self.views.pop(name, None)
         if cv:
             cv.matrel.drop()
+            self._unregister(name)
             # derived __dcmb_* specs stay REGISTERED on purpose: the
             # registry is process-global by default, so unregistering
             # here would break an identically-named derived spec in
@@ -1666,8 +1628,9 @@ class PipelineContext:
         if (new in self.views or new in self.transforms
                 or new in self.streams):
             raise CQError(f"name {new!r} is already in use")
-        self._flush_cv(old)
+        self._settle(old)
         self.views.pop(old)
+        self._unregister(old)
         cv.name = new
         self.views[new] = cv
         cv.matrel.rename(new)
@@ -1729,6 +1692,12 @@ class PipelineContext:
                 rec["name"] = f"{new}.{rec['cname']}"
         if not self._replaying:
             self._catalog_flush()
+
+    def _unregister(self, name: str) -> None:
+        """Drop a gone CV's session temp views, so a query naming it
+        fails on the name instead of scanning deleted files."""
+        for rel in (name, f"{name}_mrel"):
+            self.spark.catalog.dropTempView(rel)
 
     def rename_matrel(self, name: str) -> None:
         """Direct matrel renames are rejected exactly like the
@@ -1950,7 +1919,6 @@ class PipelineContext:
         sd = self.streams[stream]
         readers = [r for r in sd.readers
                    if targets is None or r in targets]
-        batch.createOrReplaceTempView(stream)
 
         def run_view(rname: str):
             """Worker + combiner for one CV, plus the view's own osrel
@@ -2147,20 +2115,21 @@ class PipelineContext:
             shutil.rmtree(path, ignore_errors=True)
 
     # -- reads ----------------------------------------------------------------
-    def _flush_cv(self, name: str) -> None:
-        cv = self.views.get(name)
-        if cv is None or not cv._pending:
-            return
-        os_rows = cv.commit_pending(emit_changes=self._emits_changes(cv))
-        if os_rows is not None:
-            self._emit_osrel(f"{name}_osrel", os_rows)
+    def _settle(self, name: str) -> ContView:
+        """The one prelude of every read of CV ``name``: ship the
+        buffered prepared rows of the CV's stream, then commit the
+        CV's pending batches.  Returns the view."""
+        cv = self.views[name]
+        if self._prepared:
+            self._flush_prepared(cv.plan.stream)
+        if cv._pending:
+            os_rows = cv.commit_pending(emit_changes=self._emits_changes(cv))
+            if os_rows is not None:
+                self._emit_osrel(f"{name}_osrel", os_rows)
+        return cv
 
     def read_view(self, name: str, at: float | None = None) -> DataFrame:
-        cv = self.views.get(name)
-        if cv is not None and self._prepared:
-            self._flush_prepared(cv.plan.stream)
-        self._flush_cv(name)
-        return self.views[name].read(at=at)
+        return self._settle(name).read(at=at)
 
     def pin_view(self, name: str, pin_name: str) -> dict:
         """Pin view ``name``'s current state under ``pin_name`` — a
@@ -2171,10 +2140,7 @@ class PipelineContext:
         expiry, and truncates — reproducible inputs for a training
         run over continuously-maintained aggregates.  Returns the pin
         record ({buckets, version, at})."""
-        cv = self.views[name]
-        if self._prepared:
-            self._flush_prepared(cv.plan.stream)
-        self._flush_cv(name)
+        cv = self._settle(name)
         with cv.commit_lock:
             return cv.matrel.pin(pin_name)
 
@@ -2192,17 +2158,12 @@ class PipelineContext:
         return self.views[name].matrel.pins()
 
     def read_view_pinned(self, name: str, pin_name: str) -> DataFrame:
-        """Finalized rows of a view pin (see :meth:`pin_view`)."""
-        return self.views[name].read_pinned(pin_name)
+        """Finalized rows of a view pin (see :meth:`pin_view`); no
+        settle, a pin is immutable."""
+        return self.views[name].read(pin=pin_name)
 
     def read_matrel(self, name: str) -> DataFrame:
-        self._flush_cv(name)
-        df = self.views[name].matrel.read()
-        if df is None:
-            cv = self.views[name]
-            probe = cv.worker(self.empty_stream_df(cv.plan.stream))
-            return probe.withColumn(BUCKET_COL, F.lit(0)).limit(0)
-        return df
+        return self._settle(name).states(window=False)
 
     def output_of(self, name: str, with_seq: bool = False) -> DataFrame:
         """Retained tail of a CQ's output stream, read from disk —
@@ -2270,17 +2231,10 @@ class PipelineContext:
         up a named snapshot's states instead of the live matrel (SW
         cutoff at the pin instant), so a training run's coarser
         summaries stay derivable from the exact state it consumed."""
-        cv = self.views[name]
-        if pin is not None:
-            # no flush: a pin is immutable — flushing would run a
-            # whole combiner merge whose output this read ignores
-            states = cv.pinned_states(pin)
-        else:
-            self._flush_cv(name)
-            states = (cv.sw_states(at) if cv.plan.sw_column is not None
-                      else cv.matrel.read())
-        if states is None:
-            return cv.read(at=at).limit(0)
+        # no settle for a pin: it is immutable — settling would run a
+        # whole combiner merge whose output this read ignores
+        cv = self.views[name] if pin is not None else self._settle(name)
+        states = cv.states(at, pin)
         group_by = group_by or []
         keys = [F.col(c) for c in group_by]
         jvm_aggs, pd_aggs = cv.state_merge_aggs()
@@ -2310,8 +2264,7 @@ class PipelineContext:
         import json
         if name not in self.views:
             raise CQError(f"continuous view {name} does not exist")
-        self._flush_cv(name)
-        cv = self.views[name]
+        cv = self._settle(name)
         states = cv.matrel.read()
         os.makedirs(path, exist_ok=True)
         n = 0
@@ -2371,7 +2324,7 @@ class PipelineContext:
             raise CQError("cannot modify materialization table: set "
                           "ctx.matrels_writable = True "
                           "(pipelinedb.matrels_writable)")
-        self._flush_cv(name)
+        self._settle(name)
         return cv
 
     def update_matrel(self, name: str, set_exprs: dict[str, str],
@@ -2472,7 +2425,7 @@ class PipelineContext:
         cv = self.views.get(name)
         if cv is None:
             raise CQError(f"continuous view {name} does not exist")
-        self._flush_cv(name)
+        self._settle(name)
         with cv.commit_lock:
             return cv.matrel.compact()
 
@@ -2483,7 +2436,7 @@ class PipelineContext:
         for p in list(self._prepared):
             p.flush()
         for name in list(self.views):
-            self._flush_cv(name)
+            self._settle(name)
 
     # -- prepared inserts (PREPARE / EXECUTE) ------------------------------
     def prepare_insert(self, stream: str,
@@ -2494,9 +2447,11 @@ class PipelineContext:
         src/stream_fdw.c:477-585).  Returns a handle whose
         ``execute(*params)`` binds one row; rows buffer client-side and
         ship as one micro-batch per ``batch_size`` (the reference
-        likewise microbatches prepared inserts per commit) — reads of
-        any consuming CV flush pending rows first, so results are
-        always consistent with every EXECUTE so far."""
+        likewise microbatches prepared inserts per commit).  Every
+        read of a consuming CV — ``read_view``, ``ctx.sql``,
+        ``combine_read``, ``read_matrel``, ``pin_view`` — ships
+        pending rows first, so results are always consistent with
+        every EXECUTE so far."""
         sd = self.streams.get(stream)
         if sd is None:
             raise CQError(f"unknown stream {stream}")
@@ -2517,7 +2472,7 @@ class PipelineContext:
                 p.flush()
 
     def reap_ttl(self, name: str, now: float | None = None) -> int:
-        self._flush_cv(name)
+        self._settle(name)
         return self.views[name].reap(now=now)
 
     def tick_sw(self, name: str, now: float | None = None) -> int:
@@ -2527,8 +2482,7 @@ class PipelineContext:
         expired matrel steps (reference tick_sw_groups
         src/combiner.c:992-1134; SW osrels carry no delta column).
         Returns the number of change rows emitted."""
-        self._flush_cv(name)
-        cv = self.views[name]
+        cv = self._settle(name)
         if cv.plan.sw_column is None:
             raise CQError(f"{name} is not a sliding-window view")
         now = now if now is not None else time.time()
@@ -2598,12 +2552,15 @@ class PipelineContext:
     def sql(self, query: str, at: float | None = None) -> DataFrame:
         """Ad-hoc SQL over continuous views (the ordinary read path,
         reference §3.3: any PG query may scan overlay views and — when
-        ``matrels_writable``-style access is wanted — matrels).  Every
-        CV's overlay is registered as ``<name>``, its matrel as
-        ``<name>_mrel``, before the query runs, so joins/window
-        functions/ORDER BY over CVs all work.  ``combine(col)`` queries
-        over a single CV re-aggregate persisted partial states under
-        the query's (coarser) grouping (reference RewriteCombineAggs
+        ``matrels_writable``-style access is wanted — matrels).  Each
+        CV the query names is settled and registered as ``<name>``
+        (its overlay at ``at``), each ``<name>_mrel`` it names as the
+        CV's matrel, and each registered table it names — only those,
+        found by Spark's own parser — so joins/window functions/ORDER
+        BY over CVs all work.  A query naming a stream raises
+        ``CQError``.  ``combine(col)`` queries over a single CV
+        re-aggregate persisted partial states under the query's
+        (coarser) grouping (reference RewriteCombineAggs
         src/analyzer.c:4662, test user_combine.sql)."""
         m_ins = re.match(r"(?i)^\s*INSERT\s+INTO\s+(\w+)\s*"
                          r"(?:\(([^)]*)\)\s*)?(\(?\s*SELECT\b.*)$",
@@ -2628,34 +2585,67 @@ class PipelineContext:
             sel = (f"SELECT * FROM (VALUES {tuples.strip().rstrip(';')}) "
                    f"AS __v({', '.join(cols)})")
             return self._insert_select(stream, col_list, sel)
+        rels = self._relations(query)
         if re.search(r"(?i)\b(?:sw_)?combine\s*\(", query):
-            rewritten = self._rewrite_combine_sql(query, at)
+            rewritten = self._rewrite_combine_sql(query, at, rels)
             if rewritten is not None:
                 return rewritten
-        for name, cv in self.views.items():
-            self._flush_cv(name)
-            cv.read(at=at).createOrReplaceTempView(name)
-            m = cv.matrel.read()
-            if m is not None:
-                m.createOrReplaceTempView(f"{name}_mrel")
+        self._register(rels, at)
         return self.spark.sql(query)
+
+    def _relations(self, query: str) -> set[str]:
+        """Names of the relations ``query`` reads, found by Spark's own
+        parser: the single-part identifiers of its unresolved relation
+        nodes, walked through ``children`` and ``innerChildren`` (CTE
+        bodies and subquery expressions).  Streams are not scannable
+        relations (reference stream_fdw.c): naming one raises."""
+        parser = self.spark._jsparkSession.sessionState().sqlParser()
+        rels: set[str] = set()
+        stack = [parser.parsePlan(query)]
+        while stack:
+            node = stack.pop()
+            kind = node.getClass().getSimpleName()
+            if kind in ("UnresolvedRelation", "UnresolvedTableOrView"):
+                ident = node.multipartIdentifier()
+                if ident.size() == 1:
+                    rels.add(ident.apply(0))
+            elif kind == "ExplainCommand":
+                stack.append(node.logicalPlan())
+            for kids in (node.children(), node.innerChildren()):
+                stack.extend(kids.apply(i) for i in range(kids.size()))
+        for rel in rels:
+            stream = _named(self.streams, rel)
+            if stream is not None:
+                raise CQError(f"stream {stream} is not a relation: only "
+                              "continuous queries read streams")
+        return rels
+
+    def _register(self, rels: set[str], at: float | None) -> None:
+        """Register, fresh, each CV (overlay at ``at``), ``<cv>_mrel``
+        and table named in ``rels`` as a session temp view."""
+        for rel in rels:
+            cv = _named(self.views, rel)
+            owner = (_named(self.views, rel[:-5])
+                     if rel.lower().endswith("_mrel") else None)
+            table = _named(self.tables, rel)
+            if cv is not None:
+                self.read_view(cv, at).createOrReplaceTempView(rel)
+            elif owner is not None:
+                self.read_matrel(owner).createOrReplaceTempView(rel)
+            elif table is not None:
+                self.tables[table].createOrReplaceTempView(rel)
 
     def _insert_select(self, stream: str, col_list: str | None,
                        select_sql: str) -> DataFrame:
         """``INSERT INTO stream [(cols)] SELECT ...`` — stream inserts
-        fed by a query over ordinary tables (reference
-        stream_insert_subselect.sql).  Selecting from another stream
-        is rejected, as in the reference (streams are not scannable
+        fed by a query over ordinary tables and views (reference
+        stream_insert_subselect.sql).  Selecting from a stream is
+        rejected, as in the reference (streams are not scannable
         relations)."""
         sel = select_sql.strip()
         while sel.startswith("(") and sel.endswith(")"):
             sel = sel[1:-1].strip()
-        for sname in self.streams:
-            if re.search(rf"(?i)\bFROM\s+{re.escape(sname)}\b", sel):
-                raise CQError("can't SELECT from stream "
-                              f"{sname} in a stream INSERT")
-        for tname, tdf in self.tables.items():
-            tdf.createOrReplaceTempView(tname)
+        self._register(self._relations(sel), None)
         df = self.spark.sql(sel)
         if col_list:
             cols = [c.strip() for c in col_list.split(",")]
@@ -2667,8 +2657,8 @@ class PipelineContext:
         return self.spark.createDataFrame(
             [(n,)], T.StructType([T.StructField("inserted", T.LongType())]))
 
-    def _rewrite_combine_sql(self, query: str, at: float | None
-                             ) -> DataFrame | None:
+    def _rewrite_combine_sql(self, query: str, at: float | None,
+                             rels: set[str]) -> DataFrame | None:
         """General ``combine(col)`` rewrite (reference RewriteCombineAggs
         src/analyzer.c:4662; test user_combine.sql:24-50): the CV in the
         FROM clause is replaced by its matrel *states*, the FROM/WHERE
@@ -2678,30 +2668,28 @@ class PipelineContext:
         finalized — arbitrary expressions around combine results are
         allowed (``round(combine(x), 2)``, ``combine(x)/combine(n)``).
         Exactly one CV per query; returns None when the shape doesn't
-        match (caller falls through to plain SQL)."""
+        match (caller falls through to plain SQL).  ``rels`` are the
+        relations the query names (:meth:`_relations`)."""
         from pipelinedb_spark.analyzer import split_clauses, split_top_level
         clauses = split_clauses(query)
         from_clause = clauses.get("FROM", "").strip()
         if not from_clause or "HAVING" in clauses:
             return None
-        # CV detection by FROM-clause RELATION identifiers (not a
-        # substring search over the whole clause — a join column or
-        # alias named like a CV must not trigger the rewrite)
-        rels = {r.lower() for r in _from_relations(from_clause)}
-        cv_names = [n for n in self.views if n.lower() in rels]
+        # CV detection by RELATION (a join column or alias named like
+        # a CV must not trigger the rewrite)
+        cv_rels = {r for r in rels if _named(self.views, r) is not None}
+        cv_names = {_named(self.views, r) for r in cv_rels}
         sel_combines = list(_combine_calls(clauses.get("SELECT", "")))
         if len(cv_names) != 1:
-            plain = {t.lower() for t in self.tables} | \
-                    {f"{v.lower()}_mrel" for v in self.views}
-            if sel_combines and not cv_names and rels & plain:
+            if sel_combines and not cv_names and rels:
                 # combine() over a plain table (user_combine.sql:14)
                 raise CQError("relation is not a continuous view")
             return None
-        cv_name, cv = cv_names[0], self.views[cv_names[0]]
+        cv_name = cv_names.pop()
+        cv = self.views[cv_name]
         # argument validation, mirroring the reference's targeted
         # errors (user_combine.sql:8-22 / expected/user_combine.out)
         agg_outs = {call.out for call in cv.plan.aggs}
-        cv_cols = {f.name for f in cv._overlay_schema().fields}
         for inner in sel_combines:
             args = [a.strip() for a in split_top_level(inner)]
             if len(args) != 1:
@@ -2713,22 +2701,14 @@ class PipelineContext:
                 raise CQError(
                     "combine argument must be a single aggregate column")
             if arg not in agg_outs:
-                if arg in cv_cols:
+                if arg in cv._overlay_schema().fieldNames():
                     raise CQError(
                         "combine argument is not an aggregate column")
                 raise CQError(f'column "{arg}" does not exist')
-        if cv.plan.sw_column is not None:
-            self._flush_cv(cv_name)
-            states = cv.sw_states(at)
-            if states is None:
-                states = self.read_matrel(cv_name).limit(0)
-        else:
-            states = self.read_matrel(cv_name)
         sview = f"__{cv_name}_states"
-        states.createOrReplaceTempView(sview)
-        # register any plain tables referenced alongside the CV
-        for tname, tdf in self.tables.items():
-            tdf.createOrReplaceTempView(tname)
+        self._settle(cv_name).states(at).createOrReplaceTempView(sview)
+        # register the tables and matrels named beside the CV
+        self._register(rels - cv_rels, at)
         from2 = re.sub(rf"(?i)\b{re.escape(cv_name)}\b", sview, from_clause)
         where = f" WHERE {clauses['WHERE']}" if "WHERE" in clauses else ""
         from pyspark.errors import AnalysisException
@@ -2849,7 +2829,7 @@ class PipelineContext:
         cv = self.views.get(name)
         if cv is None:
             raise CQError(f"continuous view {name} does not exist")
-        self._flush_cv(name)
+        self._settle(name)
         return cv.reap()
 
     def get_worker_querydef(self, name: str) -> str:

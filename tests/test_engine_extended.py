@@ -433,6 +433,11 @@ def test_insert_into_stream_select(ctx):
     ctx.create_stream("ss_sub2", "x long")
     with pytest.raises(CQError):
         ctx.sql("INSERT INTO ss_sub (x) (SELECT x FROM ss_sub2)")
+    with pytest.raises(CQError):
+        ctx.sql("INSERT INTO ss_sub2 (x) SELECT sub_t.x FROM sub_t "
+                "JOIN ss_sub ON sub_t.x = ss_sub.x")
+    with pytest.raises(CQError):
+        ctx.sql("SELECT * FROM ss_sub")
 
 
 def test_cv_user_designated_pk(ctx):

@@ -402,7 +402,7 @@ def test_sw_read_prunes_expired_buckets_at_manifest(ctx):
     ctx.insert("spr", [{"k": "z", "v": 1, "arrival_timestamp": stale},
                        {"k": "a", "v": 2}])
     # unreaped stale bucket exists, but the read never lists its path
-    states = cv.sw_states(at=t0)
+    states = cv.states(at=t0)
     files = {r[0] for r in
              states.select(F.input_file_name()).distinct().collect()}
     stale_id = int((t0 - 500) // float(cv.plan.sw_step_seconds))
