@@ -20,6 +20,7 @@ via ``foreachBatch`` (see ``streaming/runtime.py``).
 
 from __future__ import annotations
 
+import decimal
 import functools
 import logging
 import os
@@ -40,11 +41,17 @@ from pipelinedb_spark.aggregates import (REGISTRY, AggRegistry, AggSpec,
 from pipelinedb_spark.functions.time import ts_epoch
 from pipelinedb_spark.analyzer import CQError, CQPlan, analyze
 from pipelinedb_spark.matrel import BUCKET_COL, MatrelStore
+from pipelinedb_spark.session import arrow_frame
 
 ARRIVAL_COL = "arrival_timestamp"
 STEP_COL = "_step"
 GID_COL = "_gid"
 SEQ_COL = "_seq"  # arrival serial for append CVs with LIMIT/OFFSET
+
+
+_INT_BITS = {T.ByteType: 8, T.ShortType: 16, T.IntegerType: 32,
+             T.LongType: 64}
+_WIDE = decimal.Context(prec=80)  # quantize never clips; range is checked
 
 
 def _py_coerce(value: Any, dtype: T.DataType) -> Any:
@@ -57,9 +64,13 @@ def _py_coerce(value: Any, dtype: T.DataType) -> Any:
     if isinstance(value, float) and value != value:  # NaN
         return None
     try:
-        if isinstance(dtype, (T.LongType, T.IntegerType, T.ShortType,
-                              T.ByteType)):
-            return int(value)
+        bits = _INT_BITS.get(type(dtype))
+        if bits is not None:
+            v = int(value)
+            if not -(1 << bits - 1) <= v < 1 << bits - 1:
+                raise CQError(f"cannot coerce {value!r} to "
+                              f"{dtype.simpleString()}: out of range")
+            return v
         if isinstance(dtype, (T.DoubleType, T.FloatType)):
             return float(value)
         if isinstance(dtype, T.StringType):
@@ -69,8 +80,15 @@ def _py_coerce(value: Any, dtype: T.DataType) -> Any:
                 return value.strip().lower() in ("t", "true", "1", "yes", "on")
             return bool(value)
         if isinstance(dtype, T.DecimalType):
-            import decimal
-            return decimal.Decimal(str(value))
+            # HALF_UP at the declared scale, the JVM's rule for a
+            # Python decimal (Arrow's own quantize rounds HALF_EVEN)
+            d = decimal.Decimal(str(value)).quantize(
+                decimal.Decimal(1).scaleb(-dtype.scale),
+                rounding=decimal.ROUND_HALF_UP, context=_WIDE)
+            if d.is_finite() and len(d.as_tuple().digits) > dtype.precision:
+                raise CQError(f"cannot coerce {value!r} to "
+                              f"{dtype.simpleString()}: out of range")
+            return d
         if isinstance(dtype, T.TimestampType) and isinstance(value, str):
             import datetime
             return datetime.datetime.fromisoformat(value)
@@ -112,9 +130,29 @@ def _py_coerce(value: Any, dtype: T.DataType) -> Any:
                           f"{dtype.simpleString()}")
     except CQError:
         raise
-    except (ValueError, TypeError) as e:
+    except (ValueError, TypeError, decimal.InvalidOperation) as e:
         raise CQError(f"cannot coerce {value!r} to {dtype.simpleString()}: {e}")
     return value
+
+
+_BIND_LOCK = threading.Lock()
+
+
+def _sql_over(df: DataFrame, name: str, query: str) -> DataFrame:
+    """``query`` analysed with ``df`` bound to ``name`` for the analysis
+    only.  The name goes on ``df``'s own session: a foreachBatch frame
+    belongs to a cloned session with its own temp-view catalog.
+    ``sql()`` resolves eagerly, so the name is dropped before this
+    returns and a stream's batch never stays readable in the session
+    catalog.  One lock covers bind, analyse and drop: parallel
+    dispatch threads share a session."""
+    sess = df.sparkSession
+    with _BIND_LOCK:
+        df.createOrReplaceTempView(name)
+        try:
+            return sess.sql(query)
+        finally:
+            sess.catalog.dropTempView(name)
 
 
 def grouped_agg(df: DataFrame, key_cols: list, key_names: list[str],
@@ -872,15 +910,7 @@ class Transform:
         self.stats = Stats()
 
     def process_batch(self, batch: DataFrame) -> DataFrame:
-        # resolve the SQL against the BATCH's session: Structured
-        # Streaming's foreachBatch hands a DataFrame bound to a CLONED
-        # session whose temp-view catalog is separate from the context
-        # session's — registering the view there and running sql() on
-        # ctx.spark would silently read the stale CREATE-time probe
-        # (an empty frame), emitting 0 rows for every batch
-        sess = batch.sparkSession
-        batch.createOrReplaceTempView(self.stream)
-        out = sess.sql(self.sql)
+        out = _sql_over(batch, self.stream, self.sql)
         if self.outputfunc is not None:
             self.outputfunc(out)
         self.stats.batches += 1
@@ -1303,9 +1333,8 @@ class PipelineContext:
         # is created over its (silently empty) output stream.
         from pyspark.errors import AnalysisException
         try:
-            self.empty_stream_df(clauses_stream) \
-                .createOrReplaceTempView(clauses_stream)
-            probe_schema = self.spark.sql(sql).schema
+            probe_schema = _sql_over(self.empty_stream_df(clauses_stream),
+                                     clauses_stream, sql).schema
         except AnalysisException as exc:
             raise CQError(f"invalid transform query: {exc}") from exc
         targets = getattr(outputfunc, "__pdb_targets__", None)
@@ -1425,9 +1454,8 @@ class PipelineContext:
                     if tr.fn is None:
                         return T.StructType()  # unbound after replay
                     return tr.fn(self.empty_stream_df(tr.stream)).schema
-                self.empty_stream_df(tr.stream) \
-                    .createOrReplaceTempView(tr.stream)
-                return self.spark.sql(tr.sql).schema
+                return _sql_over(self.empty_stream_df(tr.stream),
+                                 tr.stream, tr.sql).schema
         except AnalysisException as exc:
             logging.getLogger(__name__).warning(
                 "could not resolve output-stream schema for %s "
@@ -1864,7 +1892,7 @@ class PipelineContext:
         else:
             rows = list(rows)
             if not rows:
-                return self.spark.createDataFrame([], sd.schema)
+                return arrow_frame(self.spark, [], sd.schema)
             declared = [f.name for f in sd.schema.fields
                         if f.name != ARRIVAL_COL]
             if isinstance(rows[0], dict):
@@ -1883,18 +1911,16 @@ class PipelineContext:
             data = [tuple(_py_coerce(r.get(f.name), f.dataType)
                           for f in fields) for r in dict_rows]
             # slice count derived from the batch size, not the core
-            # count: createDataFrame spreads even a 2-row list across
-            # defaultParallelism slices, and every downstream job then
-            # schedules that many near-empty tasks (a 32-task eager
-            # checkpoint of 2 rows measured ~10× the 1-slice cost).
-            # ceil(n/1000) keeps bulk inserts parallel — at the
-            # driver's lower-core runs defaultParallelism caps it, so
-            # the scaling measurement stays honest (guide §2.4
+            # count: a local frame spreads even a 2-row list across
+            # up to defaultParallelism slices, and every downstream job
+            # then schedules that many near-empty tasks (a 32-task
+            # eager checkpoint of 2 rows measured ~10× the 1-slice
+            # cost).  ceil(n/1000) keeps bulk inserts parallel — at
+            # lower core counts defaultParallelism caps it (guide §2.4
             # scale-adaptive partitioning)
             slices = max(1, min(self.spark.sparkContext.defaultParallelism,
                                 -(-len(data) // 1000)))
-            src = self.spark.createDataFrame(
-                self.spark.sparkContext.parallelize(data, slices), schema)
+            src = arrow_frame(self.spark, data, schema, slices)
         out_cols = []
         for f in sd.schema.fields:
             if f.name == ARRIVAL_COL:
@@ -2030,12 +2056,7 @@ class PipelineContext:
                       batch: DataFrame) -> DataFrame:
         if re.fullmatch(r"[A-Za-z_][\w.]*", plan.from_clause.strip()):
             return batch  # simple FROM stream
-        # the batch's session, not ctx.spark: a foreachBatch frame is
-        # bound to a cloned session with its own temp-view catalog
-        # (see Transform.process_batch)
-        sess = batch.sparkSession
-        batch.createOrReplaceTempView(stream)
-        return sess.sql(f"SELECT * FROM {plan.from_clause}")
+        return _sql_over(batch, stream, f"SELECT * FROM {plan.from_clause}")
 
     def _write_osrel_segment(self, osrel: str,
                              rows: DataFrame) -> tuple[str | None, int]:
@@ -2200,7 +2221,7 @@ class PipelineContext:
                         "default; pass track_output_streams=True to "
                         "PipelineContext for a retained history tail "
                         "with no readers attached", name)
-            empty = self.spark.createDataFrame([], schema)
+            empty = arrow_frame(self.spark, [], schema)
             return (empty.withColumn("_seq", F.lit(None).cast("long"))
                     if with_seq else empty)
         # segments may span an emission-schema change (e.g. an added
@@ -2377,7 +2398,7 @@ class PipelineContext:
         if cv is None:
             raise CQError(f"continuous view {view} does not exist")
         try:
-            self.spark.createDataFrame([], cv._overlay_schema()) \
+            arrow_frame(self.spark, [], cv._overlay_schema()) \
                 .filter(F.expr(check))
         except Exception as exc:
             raise CQError(f"invalid constraint {name!r}: {exc}") from exc
@@ -2547,7 +2568,7 @@ class PipelineContext:
         return n
 
     def empty_stream_df(self, stream: str) -> DataFrame:
-        return self.spark.createDataFrame([], self.streams[stream].schema)
+        return arrow_frame(self.spark, [], self.streams[stream].schema)
 
     def sql(self, query: str, at: float | None = None) -> DataFrame:
         """Ad-hoc SQL over continuous views (the ordinary read path,
@@ -2654,8 +2675,7 @@ class PipelineContext:
                               "the SELECT output")
             df = df.toDF(*cols)
         n = self.insert(stream, df)
-        return self.spark.createDataFrame(
-            [(n,)], T.StructType([T.StructField("inserted", T.LongType())]))
+        return arrow_frame(self.spark, [(n,)], "inserted long")
 
     def _rewrite_combine_sql(self, query: str, at: float | None,
                              rels: set[str]) -> DataFrame | None:
@@ -2839,7 +2859,7 @@ class PipelineContext:
         cv = self.views.get(name)
         if cv is None:
             raise CQError(f"continuous view {name} does not exist")
-        probe = cv.worker(self.empty_stream_df(cv.plan.stream))
+        probe = cv.worker(self._plan_batch(cv))
         return probe._jdf.queryExecution().explainString(
             self.spark._jvm.org.apache.spark.sql.execution.ExplainMode
             .fromString("formatted"))
@@ -2851,12 +2871,21 @@ class PipelineContext:
         cv = self.views.get(name)
         if cv is None:
             raise CQError(f"continuous view {name} does not exist")
-        probe = cv.worker(self.empty_stream_df(cv.plan.stream)) \
+        probe = cv.worker(self._plan_batch(cv)) \
             .withColumn(BUCKET_COL, F.lit(0))
         merged = cv.merge_fn(probe)
         return merged._jdf.queryExecution().explainString(
             self.spark._jvm.org.apache.spark.sql.execution.ExplainMode
             .fromString("formatted"))
+
+    def _plan_batch(self, cv: "ContView") -> DataFrame:
+        """A one-row list batch of nulls for ``cv``'s stream, run
+        through the worker input: the querydefs show the plan a list
+        insert runs.  An empty local frame would let the optimizer
+        fold the whole plan into an empty scan."""
+        stream = cv.plan.stream
+        batch = self._coerce_batch(self.streams[stream], [{}], None)
+        return self._worker_input(cv.plan, stream, batch)
 
     def list_views(self) -> DataFrame:
         rows = []
@@ -2865,15 +2894,16 @@ class PipelineContext:
                          cv.plan.sw_seconds, cv.ttl))
         for name, tr in self.transforms.items():
             rows.append((name, "transform", tr.sql, tr.active, None, None))
-        return self.spark.createDataFrame(
-            rows, "name string, action string, query string, active boolean, "
-                  "sw_seconds double, ttl_seconds double")
+        return arrow_frame(
+            self.spark, rows,
+            "name string, action string, query string, active boolean, "
+            "sw_seconds double, ttl_seconds double")
 
     def list_streams(self) -> DataFrame:
         rows = [(name, sd.schema.simpleString(), sd.readers)
                 for name, sd in self.streams.items()]
-        return self.spark.createDataFrame(
-            rows, "name string, schema string, readers array<string>")
+        return arrow_frame(self.spark, rows,
+                           "name string, schema string, readers array<string>")
 
     def stats_df(self) -> DataFrame:
         """Per-CQ counters (reference pipelinedb.query_stats,
@@ -2887,10 +2917,10 @@ class PipelineContext:
             st = tr.stats
             rows.append((name, "transform", st.input_rows, st.output_rows,
                          st.batches, st.errors, st.exec_ms))
-        return self.spark.createDataFrame(
-            rows, "name string, kind string, input_rows long, "
-                  "output_rows long, batches long, errors long, "
-                  "exec_ms double")
+        return arrow_frame(
+            self.spark, rows,
+            "name string, kind string, input_rows long, output_rows long, "
+            "batches long, errors long, exec_ms double")
 
     def stream_stats(self) -> DataFrame:
         """Per-stream ingest counters (reference
@@ -2898,8 +2928,8 @@ class PipelineContext:
         batches flow as columnar DataFrames, not serialized tuples)."""
         rows = [(name, sd.input_rows, sd.input_batches)
                 for name, sd in self.streams.items()]
-        return self.spark.createDataFrame(
-            rows, "stream string, input_rows long, input_batches long")
+        return arrow_frame(self.spark, rows,
+                           "stream string, input_rows long, input_batches long")
 
     def db_stats(self) -> DataFrame:
         """Whole-context rollup by CQ kind (reference

@@ -39,8 +39,12 @@ from . import manifestio as mio
 # deployment flip is manifestio.DEFAULT_MANIFEST_FORMAT
 from .manifestio import DEFAULT_MANIFEST_FORMAT  # noqa: F401
 from .manifestio import CommitConflict
+from .session import arrow_frame
 
 BUCKET_COL = "__bucket"
+# the version-dir validity table of a multi-version read
+_VALID_SCHEMA = T.StructType([T.StructField("__v", T.StringType()),
+                              T.StructField(BUCKET_COL, T.LongType())])
 
 
 def _du(path: str) -> int:
@@ -230,9 +234,9 @@ class MatrelStore:
         df = df.filter(F.col(BUCKET_COL).isin([int(b) for b in entries]))
         if len(paths) == 1:
             return df
-        valid = self.spark.createDataFrame(
-            [(self._vdir(p), int(b)) for b, p in entries.items()],
-            f"__v string, {BUCKET_COL} bigint")
+        valid = arrow_frame(
+            self.spark, [(self._vdir(p), int(b)) for b, p in entries.items()],
+            _VALID_SCHEMA)
         # Anchor to the version dir that directly CONTAINS the file
         # (packed version dirs are flat): a bare /(v\d+)/ would take the
         # FIRST match in the absolute path, so a store or ancestor dir
@@ -398,7 +402,7 @@ class MatrelStore:
             if committed is None:
                 # every affected bucket merged/constrained to empty:
                 # keep the caller's DataFrame contract, empty frame
-                committed = self.spark.createDataFrame([], merged.schema)
+                committed = arrow_frame(self.spark, [], merged.schema)
             return old, committed
         return old, merged
 

@@ -5,14 +5,19 @@ but every config here is chosen so the same plans scale to a large
 cluster: AQE handles skew/coalescing at runtime, shuffle partitions are
 sized for the local test scale and meant to be raised (or left to AQE)
 at cluster scale, and Arrow makes the unavoidable pandas-UDF paths
-batch-vectorized instead of row-at-a-time.
+batch-vectorized instead of row-at-a-time.  Arrow also carries every
+frame built from driver-side rows — list inserts, the matrel validity
+table, catalog listings — into the JVM (:func:`arrow_frame`), so no
+commit or read starts a Python worker.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 _DEFAULTS = {
     # Runtime re-planning: coalesce tiny shuffle partitions, split skewed
@@ -55,6 +60,50 @@ _DEFAULTS = {
     "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version": "2",
     "spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs": "false",
 }
+
+
+def arrow_frame(spark: SparkSession, rows: list,
+                schema: T.StructType | str,
+                slices: int | None = None) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples in ``schema``
+    field order, or dicts), handed to the JVM as one Arrow table — the
+    rule Spark Connect uses for local lists.  ``createDataFrame`` over
+    a Python list builds a PythonRDD instead, and every job over that
+    starts Python workers.  Values must already fit ``schema``
+    (``engine._py_coerce`` is the per-value rule for inserts); the
+    Arrow step rounds nothing that is already at scale.
+
+    ``slices`` fixes the partition count.  The JVM spreads a small
+    Arrow table as a LocalRelation over min(rows, cores) partitions,
+    whatever its batch count, and ``coalesce(1)`` would declare the
+    frame single-partition, so aggregates over it would drop the
+    exchange a DataFrame insert of the same rows still runs: the two
+    entries would cost different jobs.  So the rows go in as
+    ``slices`` contiguous chunks, one array row each, one Arrow batch
+    each, and ``inline`` expands them in the JVM: exactly ``slices``
+    partitions in row order, on either of the JVM's routes (a
+    LocalRelation, or past its size threshold one partition per
+    batch)."""
+    import pyarrow as pa
+    from pyspark.sql.conversion import LocalDataToArrowConversion
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    if slices is not None:
+        bounds = [len(rows) * i // slices for i in range(slices + 1)]
+        rows = [(rows[a:b],) for a, b in zip(bounds, bounds[1:])]
+        # no null elements: ``inline`` would make every nested field
+        # of a nullable-element array nullable
+        schema = T.StructType([T.StructField("r", T.ArrayType(schema, False))])
+    if rows:
+        table = LocalDataToArrowConversion.convert(rows, schema, False)
+    else:
+        table = to_arrow_schema(schema).empty_table()
+    if slices is None:
+        return spark.createDataFrame(table, schema)
+    table = pa.Table.from_batches(table.to_batches(max_chunksize=1))
+    return spark.createDataFrame(table, schema).select(F.inline("r"))
 
 
 def get_spark(app_name: str = "pipelinedb_spark", **overrides: str) -> SparkSession:
