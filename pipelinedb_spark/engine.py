@@ -1004,17 +1004,59 @@ def _named(names: dict, rel: str) -> str | None:
     return next((n for n in names if n.lower() == rel.lower()), None)
 
 
-def _combine_calls(text: str):
-    """Yield the raw argument text of each (sw_)combine(...) call."""
-    for m in re.finditer(r"(?i)\b(?:sw_)?combine\s*\(", text):
-        depth, i = 1, m.end()
-        while i < len(text) and depth:
-            if text[i] == "(":
-                depth += 1
-            elif text[i] == ")":
-                depth -= 1
-            i += 1
-        yield text[m.end():i - 1]
+def _seq(s) -> list:
+    """A Scala ``Seq`` as a Python list."""
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _plans(plan):
+    """``(name, node)`` of each plan node of a parsed statement, CTE
+    bodies, subqueries (inner children) and an EXPLAIN's plan too."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        kind = node.nodeName()
+        yield kind, node
+        stack += _seq(node.children()) + _seq(node.innerChildren()) + (
+            [node.logicalPlan()] if kind == "ExplainCommand" else [])
+
+
+def _relation_name(kind: str, node) -> str | None:
+    """The single-part name a relation node reads, else None."""
+    if kind in ("UnresolvedRelation", "UnresolvedTableOrView"):
+        ident = _seq(node.multipartIdentifier())
+        return ident[0] if len(ident) == 1 else None
+
+
+def _combine_calls(exprs: list) -> list:
+    """combine()/sw_combine() calls in parsed expressions, in order."""
+    calls, stack = [], list(exprs)
+    while stack:
+        e = stack.pop()
+        if (e.nodeName() == "UnresolvedFunction" and
+                e.nameParts().last().lower() in ("combine", "sw_combine")):
+            calls.append(e)
+        else:
+            stack += _seq(e.children())
+    return sorted(calls, key=lambda c: _span(c)[0])
+
+
+def _span(node) -> tuple[int, int]:
+    """``[start, stop)`` of a parsed node in its statement's text."""
+    o = node.origin()
+    return o.startIndex().get(), o.stopIndex().get() + 1
+
+
+def _text(text: str, node, subs: dict | None = None) -> str:
+    """The text of a parsed expression, each combine() call in it
+    replaced by ``subs``' text for its argument."""
+    lo, hi = _span(node)
+    out = text[lo:hi]
+    for call in reversed(_combine_calls([node]) if subs else []):
+        s, e = _span(call)
+        arg = call.arguments().apply(0).nameParts().apply(0)
+        out = out[:s - lo] + subs[arg] + out[e - lo:]
+    return out
 
 
 class PipelineContext:
@@ -1082,6 +1124,11 @@ class PipelineContext:
         self._catalog: list[dict] = []
         # live PREPARE handles (prepared stream inserts)
         self._prepared: list["PreparedInsert"] = []
+        # the one SQL reader (_parse), what runs its plans (_frame)
+        self._parser = spark._jsparkSession.sessionState().sqlParser()
+        self._dataset = spark._jvm.org.apache.spark.sql.classic.Dataset
+        self._calls_fn = (spark._jvm.org.apache.spark.sql.catalyst.trees
+                          .TreePattern.UNRESOLVED_FUNCTION())
         from pipelinedb_spark.functions import register_sql_functions
         register_sql_functions(spark)
         self._load_catalog()
@@ -1163,11 +1210,22 @@ class PipelineContext:
         self._catalog_flush()
 
     # -- DDL -----------------------------------------------------------------
+    def _check_new_name(self, name: str) -> None:
+        """One relation namespace: a new stream, CV or transform may not
+        take a name that any of them holds, matched as Spark resolves
+        names.  Checked at CREATE only: a catalog written before this
+        rule may hold such a pair and still replays."""
+        for kind, held in (("stream", self.streams),
+                           ("continuous view", self.views),
+                           ("transform", self.transforms)):
+            taken = None if self._replaying else _named(held, name)
+            if taken is not None:
+                raise CQError(f"{kind} {taken} already exists")
+
     def create_stream(self, name: str, schema: T.StructType | str) -> StreamDef:
         if isinstance(schema, str):
             schema = T.StructType.fromDDL(schema)
-        if name in self.streams:
-            raise CQError(f"stream {name} already exists")
+        self._check_new_name(name)
         if ARRIVAL_COL not in schema.fieldNames():
             schema = schema.add(ARRIVAL_COL, T.TimestampType())
         sd = StreamDef(name=name, schema=schema)
@@ -1223,8 +1281,7 @@ class PipelineContext:
                     step_factor: float = 5.0, ttl: str | None = None,
                     ttl_column: str | None = None,
                     pk: str | None = None) -> ContView:
-        if name in self.views or name in self.transforms:
-            raise CQError(f"continuous view {name} already exists")
+        self._check_new_name(name)
         sql = self._rewrite_output_of(sql)
         if not self._replaying:
             # bare year()/minute()/... are TRUNCATION in CQ SQL
@@ -1314,19 +1371,22 @@ class PipelineContext:
     def create_transform(self, name: str, sql: str,
                          outputfunc: Callable[[DataFrame], None] | None = None
                          ) -> Transform:
+        """CREATE VIEW … WITH (action=transform): ``sql`` runs over each
+        batch of the one stream among the relations of its parse tree
+        (``output_of('cv')`` reads the CV's output stream)."""
+        self._check_new_name(name)
         sql = self._rewrite_output_of(sql)
         if not self._replaying:
             # bare datepart truncation, CREATE-time only (see
             # create_view) — replayed catalogs keep their stored form
             from pipelinedb_spark.analyzer import rewrite_datepart_truncs
             sql = rewrite_datepart_truncs(sql)
-        clauses_stream = None
-        for s in self.streams:
-            if re.search(r"\b" + re.escape(s) + r"\b", sql):
-                clauses_stream = s
-                break
-        if clauses_stream is None:
-            raise CQError("transform must read from a stream")
+        streams = {s for r in self._relations(self._parse(sql))
+                   if (s := _named(self.streams, r)) is not None}
+        if len(streams) != 1:
+            raise CQError("transform must read exactly one stream, not "
+                          f"{sorted(streams)}")
+        clauses_stream = streams.pop()
         # Validate the SELECT resolves against the stream's schema NOW,
         # so a broken transform fails at create_transform rather than
         # surfacing later as an UNRESOLVED_COLUMN when a downstream CQ
@@ -1365,8 +1425,7 @@ class PipelineContext:
         ``set_transform_fn`` re-binds a function."""
         if stream not in self.streams:
             raise CQError(f"unknown stream {stream}")
-        if name in self.transforms or name in self.views:
-            raise CQError(f"continuous query {name} already exists")
+        self._check_new_name(name)
         # fail at CREATE, not first insert: the fn must accept the
         # stream's schema and return a DataFrame
         try:
@@ -1519,70 +1578,60 @@ class PipelineContext:
         row in the hidden ``delta_states`` struct — finalized delta
         VALUES are not re-mergeable (avg of avgs is wrong), states are.
         Rewrites each call to a derived registered aggregate over the
-        state fields; idempotent across catalog replay."""
-        pat = re.compile(
-            r"(?i)\bcombine\s*\(\s*\(?\s*(?:(\w+)\s*\.\s*)?delta\s*\)?\s*"
-            r"\.\s*(\w+)\s*\)")
-        has_calls = bool(pat.search(sql))
-        if not has_calls and "__dcmb_" not in sql:
-            return sql
-        ups = [v for v in self.views
-               if re.search(rf"(?i)\b{re.escape(v)}_osrel\b", sql)]
-        if has_calls:
-            if not ups:
-                return sql  # not an output-stream query; analyze errors
-            # relation-alias map: a qualified (alias.delta).col must
-            # bind to the alias's OWN upstream when several osrels are
-            # joined, not to whichever view happens first in catalog
-            # order
-            alias_of: dict[str, str] = {}
-            for v in ups:
-                alias_of[f"{v}_osrel".lower()] = v
-                for am in re.finditer(
-                        rf"(?i)\b{re.escape(v)}_osrel\s+(?:AS\s+)?"
-                        rf"([A-Za-z_]\w*)", sql):
-                    a = am.group(1).lower()
-                    if a not in ("on", "join", "left", "right", "full",
-                                 "inner", "cross", "natural", "outer",
-                                 "where", "group", "order", "using",
-                                 "limit", "having"):
-                        alias_of[a] = v
-
-            def repl(m: "re.Match[str]") -> str:
-                qual, col = m.group(1), m.group(2)
-                if qual is not None:
-                    up = alias_of.get(qual.lower())
-                    if up is None:
-                        raise CQError(
-                            f'relation "{qual}" in combine((delta).{col}) '
-                            "does not match any output-stream relation "
-                            "in the FROM clause")
-                elif len(ups) == 1:
-                    up = ups[0]
-                else:
+        state fields; idempotent across catalog replay.  A qualified
+        ``(alias.delta).col`` binds to the upstream of the relation its
+        parse tree aliases.  CQ text, which Spark's parser may reject or
+        misread (DISTINCT ON), is parsed only when it calls combine()."""
+        alias_of: dict[str, str] = {}
+        exprs = []
+        if re.search(r"(?i)\bcombine\s*\(", sql):
+            for kind, node in _plans(self._parse(sql)):
+                exprs += _seq(node.expressions())
+                alias = None
+                if kind == "SubqueryAlias":
+                    alias, node = node.alias(), node.child()
+                    kind = node.nodeName()
+                rel = _relation_name(kind, node) or ""
+                if (rel.lower().endswith("_osrel") and (up := _named(
+                        self.views, rel[:-len("_osrel")])) is not None):
+                    alias_of[(alias or rel).lower()] = up
+        ups = sorted(set(alias_of.values()))
+        # no upstream: not an output-stream query; analyze errors
+        for call in reversed(_combine_calls(exprs) if ups else []):
+            args = _seq(call.arguments())
+            parts = (_seq(args[0].nameParts()) if len(args) == 1 and
+                     args[0].nodeName() == "UnresolvedAttribute" else [])
+            if len(parts) not in (2, 3) or parts[-2].lower() != "delta":
+                continue  # not a delta combine; analyze judges it
+            qual, col = (parts[0] if len(parts) == 3 else None), parts[-1]
+            if qual is not None:
+                up = alias_of.get(qual.lower())
+                if up is None:
                     raise CQError(
-                        f"combine((delta).{col}) is ambiguous over "
-                        f"multiple output streams {sorted(ups)}; qualify "
-                        "the delta with its relation alias")
-                cv = self.views[up]
-                if cv.plan.sw_column is not None:
-                    # SWs don't have delta streams (delta_streams.sql:4,
-                    # expected out: column "delta" does not exist)
-                    raise CQError('column "delta" does not exist')
-                call = next((c for c in cv.plan.aggs if c.out == col),
-                            None)
-                if call is None:
-                    raise CQError(
-                        "combine argument is not an aggregate column")
-                fname = self._register_delta_combine(up, call)
-                sfx = list(self.registry.get(call.func)
-                           .partial(call.args).keys())
-                q = f"{qual}." if qual else ""
-                args = ", ".join(f"{q}delta_states.{state_col(col, s)}"
-                                 for s in sfx)
-                return f"{fname}({args})"
-
-            sql = pat.sub(repl, sql)
+                        f'relation "{qual}" in combine((delta).{col}) '
+                        "does not match any output-stream relation "
+                        "in the FROM clause")
+            elif len(ups) == 1:
+                up = ups[0]
+            else:
+                raise CQError(
+                    f"combine((delta).{col}) is ambiguous over "
+                    f"multiple output streams {ups}; qualify "
+                    "the delta with its relation alias")
+            cv = self.views[up]
+            if cv.plan.sw_column is not None:
+                # SWs don't have delta streams (delta_streams.sql:4,
+                # expected out: column "delta" does not exist)
+                raise CQError('column "delta" does not exist')
+            agg = next((c for c in cv.plan.aggs if c.out == col), None)
+            if agg is None:
+                raise CQError("combine argument is not an aggregate column")
+            fname = self._register_delta_combine(up, agg)
+            q = f"{qual}." if qual else ""
+            fargs = ", ".join(f"{q}delta_states.{state_col(col, x)}" for x
+                              in self.registry.get(agg.func).partial(agg.args))
+            s, e = _span(call)
+            sql = f"{sql[:s]}{fname}({fargs}){sql[e:]}"
         # replay of an already-rewritten catalog entry: re-register.
         # Candidate view names longest-first, but only stop on a
         # SUCCESSFUL registration — with ambiguous names (views 'a'
@@ -1905,6 +1954,7 @@ class PipelineContext:
                 dict_rows = rows
             else:
                 cols = columns or declared[: len(rows[0])]
+                self._check_columns(sd, cols)
                 dict_rows = [dict(zip(cols, r)) for r in rows]
             fields = [sd.schema[c] for c in cols if c in sd.schema.fieldNames()]
             schema = T.StructType(fields)
@@ -2476,16 +2526,21 @@ class PipelineContext:
         sd = self.streams.get(stream)
         if sd is None:
             raise CQError(f"unknown stream {stream}")
-        valid = [f.name for f in sd.schema.fields]
         if columns is None:
-            columns = valid
-        for c in columns:
-            if c not in valid:
-                raise CQError(f"column {c!r} does not exist in stream "
-                              f"{stream} (columns: {valid})")
+            columns = sd.schema.fieldNames()
+        self._check_columns(sd, columns)
         p = PreparedInsert(self, stream, list(columns), batch_size)
         self._prepared.append(p)
         return p
+
+    @staticmethod
+    def _check_columns(sd: StreamDef, columns: list[str]) -> None:
+        """An explicit column list names only the stream's columns."""
+        valid = sd.schema.fieldNames()
+        for c in columns:
+            if c not in valid:
+                raise CQError(f"column {c!r} does not exist in stream "
+                              f"{sd.name} (columns: {valid})")
 
     def _flush_prepared(self, stream: str) -> None:
         for p in list(self._prepared):
@@ -2572,79 +2627,53 @@ class PipelineContext:
 
     def sql(self, query: str, at: float | None = None) -> DataFrame:
         """Ad-hoc SQL over continuous views (the ordinary read path,
-        reference §3.3: any PG query may scan overlay views and — when
-        ``matrels_writable``-style access is wanted — matrels).  Each
-        CV the query names is settled and registered as ``<name>``
-        (its overlay at ``at``), each ``<name>_mrel`` it names as the
-        CV's matrel, and each registered table it names — only those,
-        found by Spark's own parser — so joins/window functions/ORDER
-        BY over CVs all work.  A query naming a stream raises
-        ``CQError``.  ``combine(col)`` queries over a single CV
-        re-aggregate persisted partial states under the query's
-        (coarser) grouping (reference RewriteCombineAggs
-        src/analyzer.c:4662, test user_combine.sql)."""
-        m_ins = re.match(r"(?i)^\s*INSERT\s+INTO\s+(\w+)\s*"
-                         r"(?:\(([^)]*)\)\s*)?(\(?\s*SELECT\b.*)$",
-                         query, re.S)
-        if m_ins and m_ins.group(1) in self.streams:
-            return self._insert_select(m_ins.group(1), m_ins.group(2),
-                                       m_ins.group(3))
-        m_vals = re.match(r"(?i)^\s*INSERT\s+INTO\s+(\w+)\s*"
-                          r"(?:\(([^)]*)\)\s*)?VALUES\s*(.*)$",
-                          query, re.S)
-        if m_vals and m_vals.group(1) in self.streams:
-            # INSERT INTO stream [(cols)] VALUES (expr, ...), ... with
-            # arbitrary SQL expressions in the tuples (reference
-            # stream_exprs.sql) — rewritten onto the SELECT insert path
-            # via a Spark inline table
-            stream, col_list, tuples = m_vals.groups()
-            if col_list:
-                cols = [c.strip() for c in col_list.split(",")]
-            else:
-                cols = [f.name for f in self.streams[stream].schema.fields
-                        if f.name != ARRIVAL_COL]
-            sel = (f"SELECT * FROM (VALUES {tuples.strip().rstrip(';')}) "
-                   f"AS __v({', '.join(cols)})")
-            return self._insert_select(stream, col_list, sel)
-        rels = self._relations(query)
-        if re.search(r"(?i)\b(?:sw_)?combine\s*\(", query):
-            rewritten = self._rewrite_combine_sql(query, at, rels)
-            if rewritten is not None:
-                return rewritten
+        reference §3.3).  The statement is read once, by Spark's own
+        parser, and runs as that parsed plan.  Each CV it names is
+        settled and registered fresh as its overlay at ``at``, each
+        ``<cv>_mrel`` as the CV's matrel, each registered table as
+        itself; naming a stream raises ``CQError``.  ``INSERT INTO
+        stream [(cols)] {SELECT … | VALUES …}`` inserts the body's rows;
+        ``combine(col)`` over one CV re-aggregates its partial states
+        (:meth:`_rewrite_combine_sql`)."""
+        plan = self._parse(query)
+        if plan.nodeName() == "InsertIntoStatement":
+            stream = _named(self.streams, _relation_name(
+                plan.table().nodeName(), plan.table()) or "")
+            if stream is not None:
+                return self._insert_select(stream, plan)
+        rels = self._relations(plan)
+        df = self._rewrite_combine_sql(plan, query, at, rels)
+        if df is not None:
+            return df
         self._register(rels, at)
-        return self.spark.sql(query)
+        return self._frame(plan)
 
-    def _relations(self, query: str) -> set[str]:
-        """Names of the relations ``query`` reads, found by Spark's own
-        parser: the single-part identifiers of its unresolved relation
-        nodes, walked through ``children`` and ``innerChildren`` (CTE
-        bodies and subquery expressions).  Streams are not scannable
-        relations (reference stream_fdw.c): naming one raises."""
-        parser = self.spark._jsparkSession.sessionState().sqlParser()
-        rels: set[str] = set()
-        stack = [parser.parsePlan(query)]
-        while stack:
-            node = stack.pop()
-            kind = node.getClass().getSimpleName()
-            if kind in ("UnresolvedRelation", "UnresolvedTableOrView"):
-                ident = node.multipartIdentifier()
-                if ident.size() == 1:
-                    rels.add(ident.apply(0))
-            elif kind == "ExplainCommand":
-                stack.append(node.logicalPlan())
-            for kids in (node.children(), node.innerChildren()):
-                stack.extend(kids.apply(i) for i in range(kids.size()))
+    def _parse(self, text: str):
+        """``text`` as Spark's parser reads it: the engine's one SQL reader.
+        INSERT targets, columns and bodies, relations, aliases and
+        combine() calls come from this tree, never from the text."""
+        return self._parser.parsePlan(text)
+
+    def _frame(self, plan) -> DataFrame:
+        """A parsed plan as a DataFrame, analysed now, not re-parsed."""
+        return DataFrame(self._dataset.ofRows(self.spark._jsparkSession,
+                                              plan), self.spark)
+
+    def _relations(self, plan) -> set[str]:
+        """Single-part relation names a parsed statement reads."""
+        return {rel for kind, node in _plans(plan)
+                if (rel := _relation_name(kind, node)) is not None}
+
+    def _register(self, rels: set[str], at: float | None) -> None:
+        """Register, fresh, each CV (overlay at ``at``), ``<cv>_mrel``
+        and table named in ``rels`` as a session temp view.  Streams
+        are not scannable relations (reference stream_fdw.c): naming
+        one raises."""
         for rel in rels:
             stream = _named(self.streams, rel)
             if stream is not None:
                 raise CQError(f"stream {stream} is not a relation: only "
                               "continuous queries read streams")
-        return rels
-
-    def _register(self, rels: set[str], at: float | None) -> None:
-        """Register, fresh, each CV (overlay at ``at``), ``<cv>_mrel``
-        and table named in ``rels`` as a session temp view."""
-        for rel in rels:
             cv = _named(self.views, rel)
             owner = (_named(self.views, rel[:-5])
                      if rel.lower().endswith("_mrel") else None)
@@ -2656,20 +2685,22 @@ class PipelineContext:
             elif table is not None:
                 self.tables[table].createOrReplaceTempView(rel)
 
-    def _insert_select(self, stream: str, col_list: str | None,
-                       select_sql: str) -> DataFrame:
-        """``INSERT INTO stream [(cols)] SELECT ...`` — stream inserts
-        fed by a query over ordinary tables and views (reference
-        stream_insert_subselect.sql).  Selecting from a stream is
-        rejected, as in the reference (streams are not scannable
-        relations)."""
-        sel = select_sql.strip()
-        while sel.startswith("(") and sel.endswith(")"):
-            sel = sel[1:-1].strip()
-        self._register(self._relations(sel), None)
-        df = self.spark.sql(sel)
-        if col_list:
-            cols = [c.strip() for c in col_list.split(",")]
+    def _insert_select(self, stream: str, ins) -> DataFrame:
+        """``INSERT INTO stream [(cols)] {SELECT … | VALUES …}`` (reference
+        stream_insert_subselect.sql, stream_exprs.sql): the parsed body
+        runs as parsed, its columns take the list's names (a ``VALUES``
+        body without one: the stream's columns in order) and its rows
+        enter the stream by name.  Reading a stream in it raises."""
+        body = ins.query()
+        cols = _seq(ins.userSpecifiedCols())
+        self._check_columns(self.streams[stream], cols)
+        if not cols and body.nodeName() in ("LocalRelation",
+                                            "UnresolvedInlineTable"):
+            cols = [f.name for f in self.streams[stream].schema.fields
+                    if f.name != ARRIVAL_COL]
+        self._register(self._relations(body), None)
+        df = self._frame(body)
+        if cols:
             if len(cols) != len(df.columns):
                 raise CQError("INSERT column list arity doesn't match "
                               "the SELECT output")
@@ -2677,131 +2708,113 @@ class PipelineContext:
         n = self.insert(stream, df)
         return arrow_frame(self.spark, [(n,)], "inserted long")
 
-    def _rewrite_combine_sql(self, query: str, at: float | None,
+    def _rewrite_combine_sql(self, plan, query: str, at: float | None,
                              rels: set[str]) -> DataFrame | None:
         """General ``combine(col)`` rewrite (reference RewriteCombineAggs
-        src/analyzer.c:4662; test user_combine.sql:24-50): the CV in the
-        FROM clause is replaced by its matrel *states*, the FROM/WHERE
-        (including joins against other relations) run as plain SQL over
-        those states, the GROUP BY re-merges partial states under the
-        query's grouping, and each ``combine(x)`` in the SELECT list is
-        finalized — arbitrary expressions around combine results are
-        allowed (``round(combine(x), 2)``, ``combine(x)/combine(n)``).
-        Exactly one CV per query; returns None when the shape doesn't
-        match (caller falls through to plain SQL).  ``rels`` are the
-        relations the query names (:meth:`_relations`)."""
-        from pipelinedb_spark.analyzer import split_clauses, split_top_level
-        clauses = split_clauses(query)
-        from_clause = clauses.get("FROM", "").strip()
-        if not from_clause or "HAVING" in clauses:
+        src/analyzer.c:4662; test user_combine.sql:24-50), shaped by the
+        parse tree.  FROM/WHERE, with any WITH, runs as parsed while
+        the one CV's own name is bound to its matrel *states*; GROUP BY
+        re-merges them under the query's grouping; each ``combine(x)``
+        in the SELECT list and HAVING reads the finalized ``x``
+        (``round(combine(x), 2)``, ``combine(x)/combine(n)``); ORDER
+        BY, LIMIT and OFFSET apply over the output columns.
+        Returns None when the SELECT list calls no combine()."""
+        if not plan.containsPattern(self._calls_fn):
+            return None  # no function call at all: one JVM check
+        node, with_, outer, having = plan, None, [], None
+        if node.nodeName() == "UnresolvedWith":
+            with_, node = node, node.child()
+        while (kind := node.nodeName()) in ("Sort", "Offset", "GlobalLimit",
+                                            "LocalLimit"):
+            outer.append(node)
+            node = node.child()
+        if kind == "UnresolvedHaving":
+            having, node = node, node.child()
+            kind = node.nodeName()
+        if kind not in ("Aggregate", "Project"):
             return None
-        # CV detection by RELATION (a join column or alias named like
-        # a CV must not trigger the rewrite)
-        cv_rels = {r for r in rels if _named(self.views, r) is not None}
-        cv_names = {_named(self.views, r) for r in cv_rels}
-        sel_combines = list(_combine_calls(clauses.get("SELECT", "")))
+        agg = kind == "Aggregate"
+        items = _seq(node.aggregateExpressions() if agg else node.projectList())
+        groups = _seq(node.groupingExpressions()) if agg else []
+        calls = _combine_calls(items)
+        if not calls:
+            return None
+        cv_names = {_named(self.views, r) for r in rels} - {None}
         if len(cv_names) != 1:
-            if sel_combines and not cv_names and rels:
-                # combine() over a plain table (user_combine.sql:14)
-                raise CQError("relation is not a continuous view")
-            return None
+            # combine() over a plain table (user_combine.sql:14)
+            raise CQError("relation is not a continuous view" if not
+                          cv_names else "combine() reads one continuous "
+                          f"view, not {sorted(cv_names)}")
         cv_name = cv_names.pop()
         cv = self.views[cv_name]
         # argument validation, mirroring the reference's targeted
         # errors (user_combine.sql:8-22 / expected/user_combine.out)
         agg_outs = {call.out for call in cv.plan.aggs}
-        for inner in sel_combines:
-            args = [a.strip() for a in split_top_level(inner)]
+        for call in calls:
+            args = _seq(call.arguments())
             if len(args) != 1:
                 raise CQError(
-                    f"function combine({inner.strip()}) does not exist: "
+                    f"function {_text(query, call)} does not exist: "
                     "combine accepts a single aggregate column")
-            arg = args[0]
-            if not re.fullmatch(r"[A-Za-z_]\w*", arg):
+            if (args[0].nodeName() != "UnresolvedAttribute"
+                    or args[0].nameParts().size() != 1):
                 raise CQError(
                     "combine argument must be a single aggregate column")
+            arg = args[0].nameParts().apply(0)
             if arg not in agg_outs:
                 if arg in cv._overlay_schema().fieldNames():
                     raise CQError(
                         "combine argument is not an aggregate column")
                 raise CQError(f'column "{arg}" does not exist')
-        sview = f"__{cv_name}_states"
-        self._settle(cv_name).states(at).createOrReplaceTempView(sview)
-        # register the tables and matrels named beside the CV
-        self._register(rels - cv_rels, at)
-        from2 = re.sub(rf"(?i)\b{re.escape(cv_name)}\b", sview, from_clause)
-        where = f" WHERE {clauses['WHERE']}" if "WHERE" in clauses else ""
         from pyspark.errors import AnalysisException
-        try:
-            base = self.spark.sql(f"SELECT * FROM {from2}{where}")
-        except AnalysisException as exc:
-            # a validated combine query with a bad FROM/WHERE must
-            # surface ITS analysis error, not fall through to plain
-            # SQL and die on the unresolvable combine() function
-            logging.getLogger(__name__).warning(
-                "combine rewrite: FROM/WHERE analysis failed: %s", exc)
-            raise CQError(f"invalid combine query: {exc}") from exc
+        seq = self.spark._jvm.PythonUtils.toSeq
+        base = node.child()
+        if with_ is not None:
+            base = with_.withNewChildren(seq([base]))
         # group keys: bare identifiers keep their name, expressions get
-        # positional aliases; select items referencing the same text map
-        # onto them
-        group_exprs = (split_top_level(clauses["GROUP BY"])
-                       if "GROUP BY" in clauses else [])
-        key_names, keys = [], []
-        gmap: dict[str, str] = {}
-        for i, g in enumerate(group_exprs):
-            name = g if re.fullmatch(r"[A-Za-z_]\w*", g) else f"__g{i}"
-            key_names.append(name)
-            keys.append(F.expr(g).alias(name))
-            gmap[re.sub(r"\s+", "", g).lower()] = name
-        # re-merge partial states under the query grouping
-        jvm_aggs, pd_aggs = cv.state_merge_aggs()
-        if not (jvm_aggs or pd_aggs):
-            return None
+        # positional aliases; select items equal to a key read it
+        key_names = [
+            g.nameParts().apply(0) if g.nodeName() == "UnresolvedAttribute"
+            and g.nameParts().size() == 1 else f"__g{i}"
+            for i, g in enumerate(groups)]
+        keys = [F.expr(_text(query, g)).alias(k)
+                for g, k in zip(groups, key_names)]
+        fin = {call.out: f"`__fin_{call.out}`" for call in cv.plan.aggs}
+        states = self._settle(cv_name).states(at)
         try:
-            merged = grouped_agg(base, keys, key_names, jvm_aggs, pd_aggs)
-            # finalize every combinable column, then evaluate SELECT
-            # items with combine(x) → the finalized column
-            df = cv.with_finalized(merged, "__fin_")
-            fin = {call.out: f"__fin_{call.out}" for call in cv.plan.aggs}
-        except Exception as exc:
-            logging.getLogger(__name__).warning(
-                "combine rewrite: merge/finalize failed, falling back "
-                "to plain SQL: %s", exc)
-            return None
-        out_cols = []
-        for item in split_top_level(clauses["SELECT"]):
-            item = item.strip()
-            m_alias = re.match(r"(?is)^(.*?)\s+AS\s+(\w+)\s*$", item)
-            expr_text, alias = ((m_alias.group(1), m_alias.group(2))
-                                if m_alias else (item, None))
-
-            def sub(m: "re.Match[str]") -> str:
-                src = m.group(1)
-                return f"`{fin[src]}`" if src in fin else m.group(0)
-
-            rewritten = re.sub(
-                r"(?i)\b(?:sw_)?combine\s*\(\s*([A-Za-z_]\w*)\s*\)",
-                sub, expr_text)
-            if rewritten == expr_text:
-                # plain (non-combine) item: must be a grouping expr
-                norm = re.sub(r"\s+", "", expr_text).lower()
-                src = gmap.get(norm, expr_text)
-                try:
-                    out_cols.append(F.col(src).alias(alias or src))
-                    continue
-                except Exception:
-                    return None
-            try:
-                col = F.expr(rewritten)
-            except Exception:
-                return None
-            out_cols.append(col.alias(alias) if alias else
-                            col.alias(re.sub(r"\W+", "_", expr_text)
-                                      .strip("_").lower()))
-        try:
-            return df.select(*out_cols)
-        except Exception:
-            return None
+            states.createOrReplaceTempView(cv_name)
+            self._register({r for r in rels
+                            if _named(self.views, r) is None}, at)
+            base = self._frame(base)
+            # re-merge partial states under the query grouping and
+            # finalize every combinable column
+            df = cv.with_finalized(
+                grouped_agg(base, keys, key_names, *cv.state_merge_aggs()),
+                "__fin_")
+            if having is not None:
+                df = df.filter(F.expr(
+                    _text(query, having.havingCondition(), fin)))
+            cols = []
+            for item in items:
+                kind = item.nodeName()
+                expr = (item.child() if kind in ("Alias", "UnresolvedAlias")
+                        else item)
+                key = next((k for g, k in zip(groups, key_names)
+                            if g.equals(expr)), None)
+                col = (F.col(key) if key is not None
+                       else F.expr(_text(query, expr, fin)))
+                cols.append(col.alias(item.name() if kind == "Alias"
+                                      else _text(query, expr)))
+            top = df.select(*cols)._jdf.logicalPlan()
+            for node in reversed(outer):
+                top = node.withNewChildren(seq([top]))
+            return self._frame(top)
+        except AnalysisException as exc:
+            # a validated combine query with a bad FROM/WHERE surfaces
+            # ITS analysis error (ORDER BY combine(x) is one)
+            raise CQError(f"invalid combine query: {exc}") from exc
+        finally:
+            self.spark.catalog.dropTempView(cv_name)
 
     # -- introspection (pipelinedb.views / proc_stats analogs,
     #    reference miscutils.c catalogs + stats.c counters) -----------------

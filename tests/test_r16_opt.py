@@ -7,6 +7,9 @@
   re-touched) against a duckdb relational replay.  Landed BEFORE the
   union+groupBy rewrite of `_osrel_rows` so the rewrite provably
   preserves the feed byte-for-byte (r15 verdict task 1).
+* same-key change-feed seat — one key in the old, new and delta
+  sources at once, with NULL struct fields: `first(ignorenulls)` takes
+  each struct whole from its own source, never mixing fields.
 * commit-pipeline job count — statusTracker job-count ceiling for one
   warm cascade insert (upstream CV + downstream delta-combine CV),
   the deterministic evidence the wall-clock noise floor cannot give.
@@ -130,6 +133,34 @@ ORDER BY 1, 2
     # the seat has teeth: NULL-group rows exist in every batch, and a
     # batch-3 NULL re-emission (untouched group) is present
     assert [g for g in got if g[1] is None and g[0] == 2]
+
+
+def test_changefeed_same_key_null_fields_never_mix(spark, tmp_path):
+    """One key present in the old, new and delta sources of
+    `_osrel_rows` at once, each struct holding NULL-valued fields:
+    `first(ignorenulls=True)` skips only NULL structs, so each of
+    old/new/delta comes whole from its own source and no field is
+    filled in from another."""
+    ctx = PipelineContext(spark, root=str(tmp_path / "sk"), num_buckets=1,
+                          track_output_streams=True)
+    try:
+        ctx.create_stream("sk_s", "k string, v long")
+        ctx.create_view("sk_cv", "SELECT k, count(*) AS cnt, sum(v) AS sv, "
+                                 "max(v) AS mx FROM sk_s GROUP BY k")
+        for v in (None, 5, None):
+            ctx.insert("sk_s", [{"k": "a", "v": v}])
+        got = [(None if r["old"] is None else tuple(r["old"]),
+                tuple(r["new"]), tuple(r["delta"]),
+                r["delta_states"] is None)
+               for r in sorted(ctx.output_of("sk_cv", with_seq=True)
+                               .collect(), key=lambda r: r["_seq"])]
+    finally:
+        ctx.close()
+    assert got == [
+        (None, ("a", 1, None, None), ("a", 1, None, None), False),
+        (("a", 1, None, None), ("a", 2, 5, 5), ("a", 1, 5, 5), False),
+        (("a", 2, 5, 5), ("a", 3, 5, 5), ("a", 1, None, None), False),
+    ]
 
 
 # ---------------------------------------------------------------------------
