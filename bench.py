@@ -565,6 +565,8 @@ def main() -> None:
         _wctx.insert("warm_s", [{"k": "w", "v": 3.0, "u": 3}])
         _wctx.read_view("warm_cv").collect()
         _wctx.close()
+        import shutil
+        shutil.rmtree(_wctx.root, ignore_errors=True)
     except Exception as exc:
         print(f"warmup failed (continuing): {exc}", file=sys.stderr)
 

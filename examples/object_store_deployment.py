@@ -38,7 +38,6 @@ from __future__ import annotations
 
 import os
 import sys
-import tempfile
 
 
 def main() -> None:
@@ -66,9 +65,7 @@ def main() -> None:
             "training-bucket", os.path.abspath(d),
             endpoint_url=fake.endpoint_url, region_name="us-east-1")
 
-        ctx = PipelineContext(spark,
-                              root=tempfile.mkdtemp(prefix="s3dep_"),
-                              num_buckets=8,
+        ctx = PipelineContext(spark, num_buckets=8,
                               track_output_streams=False)
         ctx.create_stream("events", "user string, amount double")
         ctx.create_view(

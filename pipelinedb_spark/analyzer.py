@@ -4,17 +4,26 @@ overlay finalize plan).
 
 Mirrors the behavior (not the implementation) of the reference's
 ``TransformSelectStmtForContProcess`` (``src/analyzer.c:2762-3074``),
-``ValidateParsedContQuery`` (``src/analyzer.c:1183-1336``) and the
-streaming-variant rewrite table (``src/analyzer.c:84-107``).  The
-reference manipulates raw Postgres parse trees; here we do a light
-clause-level parse and hand every scalar expression through to Spark SQL
-untouched — Catalyst is the real expression compiler.
+``ValidateParsedContQuery`` (``src/analyzer.c:1183-1336``),
+``find_clock_timestamp_expr`` (``src/analyzer.c:321-423``) and the
+streaming-variant rewrite table (``src/analyzer.c:84-107``).  Like the
+reference, which walks Postgres parse trees, :func:`analyze` reads the
+CQ once with Spark's own parser (the engine's one SQL reader) and takes
+every structural fact from that tree: the clause chain, select items
+and their aliases, aggregate calls (name, DISTINCT, FILTER, WITHIN
+GROUP arguments), GROUP BY entries, the relations of FROM and the
+sliding-window conjunct of WHERE.  Scalar expressions reach Catalyst,
+the real expression compiler, as the text of their tree nodes, cut from
+the statement at each node's origin.  Only three PostgreSQL spellings
+that Spark's parser misreads are rewritten first, in one
+string-literal-aware, length-preserving pass (:func:`pg_spellings`).
 """
 
 from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
+from typing import Callable
 
 from pipelinedb_spark.aggregates import REGISTRY, AggRegistry
 
@@ -25,85 +34,175 @@ class CQError(ValueError):
 
 
 # ---------------------------------------------------------------------------
-# Tokenizer helpers: find top-level occurrences (outside parens/quotes)
+# Spark parse trees: the engine's one SQL reader hands every statement over
+# as an unresolved logical plan; these helpers read it.
 # ---------------------------------------------------------------------------
 
-def _scan(sql: str):
-    """Yield (index, char, depth, in_string) for top-level scanning."""
-    depth = 0
-    i = 0
-    n = len(sql)
-    while i < n:
-        c = sql[i]
-        if c == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            i = j + 1
-            continue
-        if c == '"':
-            j = sql.find('"', i + 1)
-            i = (j if j != -1 else n) + 1
-            continue
-        if c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        yield i, c, depth
-        i += 1
+def _named(names, rel: str) -> str | None:
+    """The one of ``names`` that relation ``rel`` denotes, matched
+    case-insensitively as Spark resolves identifiers."""
+    if rel in names:
+        return rel
+    return next((n for n in names if n.lower() == rel.lower()), None)
 
 
-def split_top_level(sql: str, sep: str = ",") -> list[str]:
-    parts, last = [], 0
-    for i, c, depth in _scan(sql):
-        if c == sep and depth == 0:
-            parts.append(sql[last:i])
-            last = i + 1
-    parts.append(sql[last:])
-    return [p.strip() for p in parts if p.strip()]
+def _seq(s) -> list:
+    """A Scala ``Seq`` as a Python list."""
+    return [s.apply(i) for i in range(s.size())]
 
 
-def find_keyword(sql: str, kw: str) -> int:
-    """Index of a top-level keyword (case-insensitive, word-bounded); -1.
-    One _scan pass builds the set of top-level (outside parens/strings)
-    positions; matches are checked against it — O(n + matches)."""
-    pat = re.compile(r"\b" + kw.replace(" ", r"\s+") + r"\b", re.I)
-    top = {i for i, _, d in _scan(sql) if d == 0}
-    for m in pat.finditer(sql):
-        if m.start() in top:
-            return m.start()
-    return -1
+def _plans(plan):
+    """``(name, node)`` of each plan node of a parsed statement, CTE
+    bodies, subqueries (inner children) and an EXPLAIN's plan too."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        kind = node.nodeName()
+        yield kind, node
+        stack += _seq(node.children()) + _seq(node.innerChildren()) + (
+            [node.logicalPlan()] if kind == "ExplainCommand" else [])
 
 
-_CLAUSES = ["SELECT", "FROM", "WHERE", "GROUP BY", "HAVING",
-            "ORDER BY", "LIMIT", "OFFSET"]
+# expression nodes without children
+_LEAVES = ("UnresolvedAttribute", "Literal")
 
 
-def split_clauses(sql: str) -> dict[str, str]:
-    sql = sql.strip().rstrip(";")
-    positions = []
-    for kw in _CLAUSES:
-        idx = find_keyword(sql, kw)
-        if idx >= 0:
-            positions.append((idx, kw))
-    positions.sort()
-    out: dict[str, str] = {}
-    for j, (idx, kw) in enumerate(positions):
-        end = positions[j + 1][0] if j + 1 < len(positions) else len(sql)
-        out[kw] = sql[idx + len(kw): end].strip()
+def _expressions(plan) -> list:
+    """``(name, node)`` of every expression node of a parsed statement."""
+    out = []
+    for _, node in _plans(plan):
+        stack = _seq(node.expressions())
+        while stack:
+            e = stack.pop()
+            out.append((kind := e.nodeName(), e))
+            if kind not in _LEAVES:
+                stack += _seq(e.children())
     return out
 
 
+def _output_of(node) -> str | None:
+    """The view an ``output_of('cv')`` table function node reads."""
+    if _seq(node.name())[-1].lower() != "output_of":
+        return None
+    args = _seq(node.functionArgs())
+    if len(args) != 1 or args[0].nodeName() != "Literal":
+        raise CQError("output_of() takes one continuous view name")
+    return args[0].value().toString()
+
+
+def _relation_name(kind: str, node) -> str | None:
+    """The single-part name a relation node reads, else None; an
+    ``output_of('cv')`` call reads the output stream ``cv_osrel``."""
+    if kind in ("UnresolvedRelation", "UnresolvedTableOrView"):
+        ident = _seq(node.multipartIdentifier())
+        return ident[0] if len(ident) == 1 else None
+    if kind == "UnresolvedTableValuedFunction" and (
+            cv := _output_of(node)) is not None:
+        return f"{cv}_osrel"
+
+
+def _fname(node) -> str | None:
+    """Lower-cased name of an unqualified function call node."""
+    parts = _seq(node.nameParts())
+    return parts[0].lower() if len(parts) == 1 else None
+
+
+def _combine_calls(exprs: list) -> list:
+    """combine()/sw_combine() calls in parsed expressions, in order."""
+    calls, stack = [], list(exprs)
+    while stack:
+        e = stack.pop()
+        if (e.nodeName() == "UnresolvedFunction" and
+                e.nameParts().last().lower() in ("combine", "sw_combine")):
+            calls.append(e)
+        else:
+            stack += _seq(e.children())
+    return sorted(calls, key=lambda c: _span(c)[0])
+
+
+def _span(node) -> tuple[int, int]:
+    """``[start, stop)`` of a parsed node in its statement's text."""
+    o = node.origin()
+    return o.startIndex().get(), o.stopIndex().get() + 1
+
+
+def _extent(node, kind: str | None = None) -> tuple[int, int]:
+    """``[start, stop)`` of a parsed expression's whole text.  Spark
+    dates a predicate (``x IN (…)``, ``x IS NULL``, ``x BETWEEN …``)
+    from its operator, so the extent starts at the first leaf when
+    that comes earlier.  ``kind``: the node's name, when known."""
+    lo, hi = _span(node)
+    if kind not in _LEAVES:
+        start = node.collectLeaves().head().origin().startIndex()
+        if start.isDefined():
+            lo = min(lo, start.get())
+    return lo, hi
+
+
+def _splice(text: str, edits: list[tuple[int, int, str]]) -> str:
+    """``text`` with each ``(start, stop, new)`` edit applied."""
+    for s, e, new in sorted(edits, reverse=True):
+        text = text[:s] + new + text[e:]
+    return text
+
+
+def _text(text: str, node, subs: dict | None = None) -> str:
+    """The text of a parsed expression, each combine() call in it
+    replaced by ``subs``' text for its argument."""
+    lo, hi = _extent(node)
+    edits = []
+    for call in _combine_calls([node]) if subs else []:
+        s, e = _span(call)
+        arg = call.arguments().apply(0).nameParts().apply(0)
+        edits.append((s - lo, e - lo, subs[arg]))
+    return _splice(text[lo:hi], edits)
+
+
 # ---------------------------------------------------------------------------
-# Aggregate extraction
+# PostgreSQL spellings Spark's parser misreads
 # ---------------------------------------------------------------------------
 
-_IDENT_RE = re.compile(r"[A-Za-z_][A-Za-z_0-9]*")
+_DISTINCT_ON = re.compile(r"(?is)\A(\s*SELECT\s+DISTINCT)(\s+ON\s*\(([^()]*)\))")
+_PG_TOKEN = re.compile(
+    r"""(?P<alias>\bAS\s+"[^"`]*")
+      | '(?:[^'\\]|\\.)*' | "(?:[^"\\]|\\.)*" | `[^`]*`
+      | --[^\n]* | /\*.*?\*/
+      | (?P<array>\bARRAY\s*\[) | (?P<bracket>[\[\]])""",
+    re.I | re.S | re.X)
+
+
+def pg_spellings(sql: str) -> tuple[str, list[str] | None]:
+    """``sql`` as Spark's parser should read it, and the columns of a
+    leading ``DISTINCT ON (…)``.  Three PostgreSQL spellings change,
+    outside string literals, quoted identifiers and comments:
+    ``DISTINCT ON (cols)`` (Spark reads a call to a function ``ON``)
+    keeps its ``DISTINCT``; ``ARRAY[…]`` becomes ``array(…)``; and
+    ``AS "alias"`` becomes ``AS `alias```.  Every change keeps the
+    text's length, so node origins index both texts alike."""
+    out = list(sql)
+    distinct_on = None
+    m = _DISTINCT_ON.match(sql)
+    if m:
+        out[m.start(2):m.end(2)] = " " * (m.end(2) - m.start(2))
+        distinct_on = [c.strip() for c in m.group(3).split(",")
+                       if c.strip()]
+    arrays: list[bool] = []   # open brackets: ARRAY[ or a subscript
+    for t in _PG_TOKEN.finditer(sql):
+        if t.group("alias"):
+            out[sql.index('"', t.start())] = out[t.end() - 1] = "`"
+        elif t.group("array"):
+            arrays.append(True)
+            out[t.end() - 1] = "("
+        elif t.group("bracket") == "[":
+            arrays.append(False)
+        elif t.group("bracket") and arrays and arrays.pop():
+            out[t.start()] = ")"
+    return "".join(out), distinct_on
+
+
+# ---------------------------------------------------------------------------
+# Plan
+# ---------------------------------------------------------------------------
 
 # names users may not alias outputs to: the stream's implicit arrival
 # column plus this engine's internal matrel columns
@@ -121,10 +220,6 @@ STREAMING_VARIANTS = {
 }
 
 
-_LITERAL_ARG_RE = re.compile(
-    r"^\s*(?:[+-]?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?|'(?:[^']|'')*'|\*)\s*$")
-
-
 @dataclass
 class AggCall:
     out: str            # output/state column prefix
@@ -135,21 +230,23 @@ class AggCall:
     # combiner merges unfiltered states exactly as the reference strips
     # the clause from combiner aggs (src/analyzer.c:3053-3068)
     filter: str | None = None
+    # per arg: a constant (number, string, ``*``), not a per-row input
+    consts: list[bool] = field(default_factory=list)
 
     def worker_args(self) -> list[str]:
         """Args for the worker's partial aggregation, with the FILTER
         condition folded in.  Every registry aggregate is NULL-strict
         (built-ins skip NULL inputs; sketch UDAFs dropna), so
         ``FILTER (WHERE c)`` ≡ nulling out the data args on non-
-        matching rows — PG's row-removal semantics.  Literal/parameter
-        args (numbers, strings, ``*``) are left untouched: they are
-        direct arguments, not per-row inputs."""
+        matching rows — PG's row-removal semantics.  Constant args are
+        left untouched: they are direct arguments, not per-row
+        inputs."""
         if self.filter is None:
             return self.args
         cond = f"({self.filter})"
         wrapped, any_data = [], False
-        for a in self.args:
-            if _LITERAL_ARG_RE.match(a):
+        for a, const in zip(self.args, self.consts):
+            if const:
                 wrapped.append(a)
             else:
                 wrapped.append(f"CASE WHEN {cond} THEN ({a}) END")
@@ -174,11 +271,9 @@ class CQPlan:
     stream: str                                # the single stream read
     where: str | None
     limit: int | None
-    distinct: bool
     sw_column: str | None = None               # sliding-window time column
     sw_seconds: float | None = None
     sw_step_seconds: float | None = None
-    tables: list[str] = field(default_factory=list)
     # GROUPING SETS/CUBE/ROLLUP: list of sets (each a list of exprs from
     # group_exprs); None for plain GROUP BY (reference analyzer.c:2819)
     grouping_sets: list[list[str]] | None = None
@@ -193,125 +288,104 @@ class CQPlan:
     # LIMIT ... OFFSET n (reference cont_limit.sql): the overlay skips
     # the first n rows in ARRIVAL order for append CVs
     offset: int | None = None
+    # FROM names the stream alone: the worker reads each batch as is
+    bare_stream: bool = False
+    # the CQ after its CREATE-time rewrites: what the catalog stores
+    sql: str = ""
 
 
-def _find_call_end(sql: str, open_idx: int) -> int:
-    depth = 0
-    i = open_idx
-    n = len(sql)
-    while i < n:
-        c = sql[i]
-        if c == "'":
-            j = i + 1
-            while j < n and not (sql[j] == "'" and (j + 1 >= n or sql[j + 1] != "'")):
-                j += 2 if sql[j] == "'" else 1
-            i = j
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
-    raise CQError(f"unbalanced parentheses in: {sql!r}")
+def _norm(expr: str) -> str:
+    """Expression text compared whitespace- and case-insensitively."""
+    return "".join(expr.split()).lower()
 
 
-def _fold_within_group(expr: str) -> str:
-    """``fn(a) WITHIN GROUP (ORDER BY x [, y])`` → ``fn(a, x[, y])``
-    (reference folds WITHIN GROUP args into plain args,
-    src/analyzer.c:2091-2108)."""
-    pat = re.compile(r"\)\s*WITHIN\s+GROUP\s*\(\s*ORDER\s+BY\s+", re.I)
-    while True:
-        m = pat.search(expr)
-        if not m:
-            return expr
-        close = expr.find(")", m.end())
-        depth = 1
-        i = m.end()
-        while i < len(expr):
-            if expr[i] == "(":
-                depth += 1
-            elif expr[i] == ")":
-                depth -= 1
-                if depth == 0:
-                    close = i
-                    break
-            i += 1
-        order_args = expr[m.end():close]
-        expr = expr[: m.start()] + ", " + order_args + ")" + expr[close + 1:]
+def _column_name(body: str) -> str:
+    """Output name of an unaliased, non-identifier select item: its
+    word characters, runs of anything else as one ``_``."""
+    words = "".join(c if c.isalnum() or c == "_" else " " for c in body)
+    return "_".join(words.split()).strip("_")
 
 
-def extract_aggs(expr: str, registry: AggRegistry, used: set[str],
-                 alias_hint: str | None = None) -> tuple[str, list[AggCall]]:
-    """Replace aggregate calls in ``expr`` with ``{placeholder}`` refs,
-    returning the rewritten expression and the extracted calls.  This is
-    the hoisting step (reference src/analyzer.c:2880-3008)."""
-    expr = _fold_within_group(expr)
-    calls: list[AggCall] = []
-    out_parts: list[str] = []
-    i = 0
-    n = len(expr)
-    while i < n:
-        m = _IDENT_RE.match(expr, i)
-        if not m:
-            out_parts.append(expr[i])
-            i += 1
-            continue
-        word = m.group(0)
-        j = m.end()
-        while j < n and expr[j].isspace():
-            j += 1
-        fname = word.lower()
-        if j < n and expr[j] == "(" and (fname in registry or fname in STREAMING_VARIANTS or fname == "count"):
-            close = _find_call_end(expr, j)
-            inner = expr[j + 1: close]
-            args = split_top_level(inner) if inner.strip() else []
-            func = fname
-            # count(DISTINCT x) → streaming hll_count_distinct unless
-            # it's an exact-friendly rewrite requested upstream
-            if args and re.match(r"(?i)^DISTINCT\s+", args[0]):
-                bare = re.sub(r"(?i)^DISTINCT\s+", "", args[0])
-                if fname == "count":
-                    func, args = "hll_count_distinct", [bare] + args[1:]
-                elif fname == "array_agg":
-                    func, args = "set_agg", [bare] + args[1:]
-                else:
-                    raise CQError(
-                        f"DISTINCT is only supported by count/array_agg in "
-                        f"continuous queries: {word}({inner})")
-            func = STREAMING_VARIANTS.get(func, func)
-            if func not in registry:
-                raise CQError(f"aggregate {word} is not combinable / not supported")
-            # agg(...) FILTER (WHERE cond) — reference parses the
-            # clause on worker aggregates and strips it on combiner
-            # aggs (src/analyzer.c:3053-3068; cont_dist_agg.sql:38)
-            call_end, filt = close, None
-            fm = re.compile(r"\s*FILTER\s*\(", re.I).match(expr, close + 1)
-            if fm:
-                fclose = _find_call_end(expr, fm.end() - 1)
-                inner_f = expr[fm.end(): fclose].strip()
-                wm = re.match(r"(?i)^WHERE\s+", inner_f)
-                if not wm:
-                    raise CQError(f"malformed FILTER clause in: "
-                                  f"{expr[m.start():fclose + 1]}")
-                filt = inner_f[wm.end():].strip()
-                call_end = fclose
-            base = alias_hint if (alias_hint and not calls and expr.strip() == expr[m.start():call_end + 1].strip()) else fname
-            out = base
-            k = 0
-            while out in used:
-                k += 1
-                out = f"{base}_{k}"
-            used.add(out)
-            calls.append(AggCall(out=out, func=func, args=args,
-                                 text=expr[m.start():call_end + 1],
-                                 filter=filt))
-            out_parts.append("{" + out + "}")
-            i = call_end + 1
+def _parse_cq(parse: Callable, sql: str, text: str):
+    from pyspark.errors import ParseException
+    try:
+        return parse(text)
+    except ParseException as exc:
+        raise CQError(f"invalid continuous query {sql!r}: {exc}") from exc
+
+
+# ---------------------------------------------------------------------------
+# Aggregate extraction
+# ---------------------------------------------------------------------------
+
+def _agg_call(text: str, call, fname: str, registry: AggRegistry,
+              out: str) -> AggCall:
+    """One hoisted aggregate call (reference src/analyzer.c:2880-3008):
+    ``count(DISTINCT x)`` streams as ``hll_count_distinct``,
+    ``array_agg(DISTINCT x)`` as ``set_agg``, and WITHIN GROUP's
+    ordering expressions follow the arguments (the reference folds them
+    likewise, src/analyzer.c:2091-2108)."""
+    span = _span(call)
+    args, consts = [], []
+    for a in _seq(call.arguments()) + [
+            o.child() for o in _seq(call.orderingWithinGroup())]:
+        kind = a.nodeName()
+        lo, hi = _extent(a, kind)
+        # Spark reads count(*) as count(1), dated from the call's start
+        args.append("*" if lo == span[0] else text[lo:hi])
+        consts.append(kind == "Literal")
+    func = fname
+    if call.isDistinct():
+        if fname == "count":
+            func = "hll_count_distinct"
+        elif fname == "array_agg":
+            func = "set_agg"
         else:
-            out_parts.append(word)
-            i = m.end()
-    return "".join(out_parts), calls
+            raise CQError(
+                f"DISTINCT is only supported by count/array_agg in "
+                f"continuous queries: {text[span[0]:span[1]]}")
+    func = STREAMING_VARIANTS.get(func, func)
+    if func not in registry:
+        raise CQError(f"aggregate {fname} is not combinable / not supported")
+    # agg(...) FILTER (WHERE cond) — reference parses the clause on
+    # worker aggregates and strips it on combiner aggs
+    # (src/analyzer.c:3053-3068; cont_dist_agg.sql:38)
+    filt = call.filter()
+    return AggCall(out=out, func=func, args=args,
+                   text=text[span[0]:span[1]],
+                   filter=_text(text, filt.get()) if filt.isDefined()
+                   else None, consts=consts)
+
+
+def _hoist(text: str, body, extent: tuple[int, int], registry: AggRegistry,
+           used: set[str], alias: str | None) -> tuple[str, list[AggCall]]:
+    """The text of ``body`` (at ``extent``) with each aggregate call
+    replaced by an ``{out}`` placeholder, and the calls.  A body that
+    is one call names its state after the item's alias."""
+    found, stack = [], [body]
+    while stack:
+        e = stack.pop()
+        kind = e.nodeName()
+        if kind == "UnresolvedFunction":
+            fname = _fname(e)
+            if (fname in registry or fname in STREAMING_VARIANTS
+                    or fname == "count"):
+                found.append((_span(e), fname, e))
+                continue
+        if kind not in _LEAVES:
+            stack += _seq(e.children())
+    lo, hi = extent
+    calls, edits = [], []
+    for (s, e), fname, node in sorted(found, key=lambda f: f[0]):
+        base = alias if (alias and node is body) else fname
+        out, k = base, 0
+        while out in used:
+            k += 1
+            out = f"{base}_{k}"
+        used.add(out)
+        calls.append(_agg_call(text, node, fname, registry, out))
+        edits.append((s - lo, e - lo, "{" + out + "}"))
+    return _splice(text[lo:hi], edits), calls
 
 
 # ---------------------------------------------------------------------------
@@ -339,69 +413,66 @@ def parse_interval(text: str) -> float:
     return total
 
 
-_SW_RE = re.compile(
-    # a bare timestamp column OR one function call over it, e.g.
-    # minute_trunc(arrival_timestamp) (reference resolves whole
-    # arrival_timestamp expressions, find_clock_timestamp_expr,
-    # src/analyzer.c:321-423), optionally with a constant interval
-    # offset on the LHS: ``expr + interval 'K' > clock_timestamp() -
-    # interval 'W'`` normalizes to ``expr > clock_timestamp() -
-    # (W + K)`` (reference sw_ts_expr1, pipeline_regress.sql:183-185)
-    r"(?P<col>[A-Za-z_][\w.]*(?:\s*\(\s*[A-Za-z_][\w.]*\s*\))?)"
-    r"(?:\s*(?P<offsign>[+-])\s*interval\s*'(?P<off>[^']+)')?"
-    r"\s*>=?\s*\(?\s*"
-    r"(?:clock_timestamp|now|current_timestamp)\s*\(\s*\)\s*-\s*"
-    r"interval\s*'(?P<iv>[^']+)'\s*\)?", re.I)
+_CLOCKS = ("clock_timestamp", "now", "current_timestamp")
 
 
-def split_conjuncts(where: str) -> list[str]:
-    """Split a WHERE clause into top-level AND conjuncts (paren- and
-    string-literal-aware)."""
-    top = {i for i, _, d in _scan(where) if d == 0}
-    parts, last = [], 0
-    for m in re.finditer(r"(?i)\bAND\b", where):
-        # positions inside strings/parens are absent from `top`
-        if m.start() in top:
-            parts.append(where[last:m.start()])
-            last = m.end()
-    parts.append(where[last:])
-    return [p.strip() for p in parts if p.strip()]
+def _interval(text: str, node) -> float | None:
+    """Seconds of an ``interval '…'`` literal node, else None."""
+    lit = _text(text, node) if node.nodeName() == "Literal" else ""
+    return parse_interval(lit) if lit.lower().startswith("interval") else None
 
 
-def detect_sliding_window(where: str | None) -> tuple[str | None, float | None, str | None]:
-    """Find ``ts > clock_timestamp() - interval 'X'`` in WHERE; return
-    (column, seconds, remaining_where).  The matching conjunct is
-    removed whole — mid-conjunction predicates splice cleanly
-    (reference removes the matched parse-tree node,
-    find_clock_timestamp_expr src/analyzer.c:321-423)."""
-    if not where:
-        return None, None, where
-    if not _SW_RE.search(where):
-        return None, None, where
-    col = secs = None
-    rest_parts = []
-    for conj in split_conjuncts(where):
-        m = _SW_RE.search(conj)
-        if m is not None and col is None:
-            col = m.group("col")
-            secs = parse_interval(m.group("iv"))
-            if m.group("off"):
-                # LHS interval offset folds into the window width:
-                # expr + K > clock() - W  ⟺  expr > clock() - (W + K)
-                k = parse_interval(m.group("off"))
-                secs = secs + k if m.group("offsign") == "+" else secs - k
-                if secs <= 0:
-                    raise CQError(
-                        "sliding-window offset leaves a non-positive "
-                        f"window ({secs}s)")
-        else:
-            rest_parts.append(conj)
-    rest = " AND ".join(rest_parts).strip()
-    return col, secs, (rest or None)
+def _conjuncts(cond) -> list:
+    """Top-level AND conjuncts of a parsed condition, in order."""
+    if cond.nodeName() == "And":
+        return _conjuncts(cond.left()) + _conjuncts(cond.right())
+    return [cond]
+
+
+def _window_predicate(text: str, cond) -> tuple[str, float] | None:
+    """(time expression, window seconds) of a conjunct shaped
+    ``expr >[=] {clock_timestamp|now|current_timestamp}() - interval
+    'W'``.  A constant offset on the left folds into the width:
+    ``expr + interval 'K' > clock() - interval 'W'`` ⟺ ``expr >
+    clock() - (W + K)`` (reference sw_ts_expr1,
+    pipeline_regress.sql:183-185)."""
+    if (cond.nodeName() not in ("GreaterThan", "GreaterThanOrEqual")
+            or cond.right().nodeName() != "Subtract"):
+        return None
+    lhs, (clock, width) = cond.left(), _seq(cond.right().children())
+    if (clock.nodeName() != "UnresolvedFunction" or _fname(clock)
+            not in _CLOCKS or clock.arguments().size()
+            or (secs := _interval(text, width)) is None):
+        return None
+    if lhs.nodeName() in ("Add", "Subtract") and (
+            k := _interval(text, lhs.right())) is not None:
+        secs = secs + k if lhs.nodeName() == "Add" else secs - k
+        lhs = lhs.left()
+        if secs <= 0:
+            raise CQError("sliding-window offset leaves a non-positive "
+                          f"window ({secs}s)")
+    return _text(text, lhs), secs
+
+
+def _sliding_window(text: str, cond) -> tuple[str | None, float | None,
+                                              str | None]:
+    """(column, seconds, remaining WHERE) of the first sliding-window
+    conjunct (reference removes the matched node,
+    find_clock_timestamp_expr src/analyzer.c:321-423).  The remaining
+    conjuncts rejoin with AND; an OR among them keeps its parentheses,
+    which node text leaves out."""
+    parts = _conjuncts(cond)
+    for i, c in enumerate(parts):
+        sw = _window_predicate(text, c)
+        if sw is not None:
+            rest = [f"({_text(text, p)})" if p.nodeName() == "Or"
+                    else _text(text, p) for p in parts[:i] + parts[i + 1:]]
+            return sw[0], sw[1], " AND ".join(rest) or None
+    return None, None, _text(text, cond)
 
 
 # ---------------------------------------------------------------------------
-# Sub-SELECT validation (reference ValidateSubselect,
+# FROM: relations and sub-SELECT validation (reference ValidateSubselect,
 # src/analyzer.c:1344-1407): inner queries of a CQ's FROM clause must be
 # simple projections — the continuous semantics of aggregates/DISTINCT/
 # ORDER BY etc. inside a subquery would silently differ from batch SQL.
@@ -412,210 +483,207 @@ _SUBSELECT_AGGS = {"count", "sum", "avg", "min", "max", "stddev",
                    "stddev_pop", "array_agg", "string_agg", "json_agg",
                    "collect_list", "collect_set", "first", "last"}
 
+# what a sub-SELECT may not contain, by plan node, in report order
+_SUBSELECT_CLAUSES = {
+    "UnresolvedWith": "CTEs", "GROUP BY": "GROUP BY clauses",
+    "UnresolvedHaving": "HAVING clauses", "Sort": "ORDER BY clauses",
+    "GlobalLimit": "LIMIT clauses", "Offset": "OFFSET clauses",
+    "Distinct": "DISTINCT clauses", "aggregates": "aggregates"}
+_FROM_KINDS = {"Join", "SubqueryAlias", "UnresolvedRelation",
+               "UnresolvedTableOrView", "UnresolvedTableValuedFunction"}
 
-def _validate_subselects(from_clause: str, registry: AggRegistry) -> None:
-    desc = "subqueries in continuous views"
-    for m in re.finditer(r"(?i)\(\s*(SELECT|WITH)\b", from_clause):
-        # extract the balanced-paren inner text (string-aware)
-        start = m.start()
-        end = None
-        for i, c, d in _scan(from_clause[start:]):
-            if c == ")" and d == 0:
-                end = start + i
-                break
-        inner = from_clause[start + 1: end] if end else from_clause[start + 1:]
-        if re.match(r"(?i)^\s*WITH\b", inner):
-            raise CQError(f"{desc} cannot contain CTEs")
-        sub = split_clauses(inner)
-        for kw, what in [("GROUP BY", "GROUP BY clauses"),
-                         ("HAVING", "HAVING clauses"),
-                         ("ORDER BY", "ORDER BY clauses"),
-                         ("LIMIT", "LIMIT clauses"),
-                         ("OFFSET", "OFFSET clauses")]:
-            if kw in sub:
-                raise CQError(f"{desc} cannot contain {what}")
-        if re.match(r"(?i)^\s*DISTINCT\b", sub.get("SELECT", "")):
-            raise CQError(f"{desc} cannot contain DISTINCT clauses")
-        if re.search(r"(?i)\bOVER\s*\(", inner):
-            raise CQError(f"{desc} cannot contain window functions")
-        if re.search(r"(?i)\bFOR\s+UPDATE\b", inner):
-            raise CQError(f"{desc} cannot contain FOR UPDATE clauses")
-        for fname in re.findall(r"([A-Za-z_]\w*)\s*\(", inner):
-            f = fname.lower()
-            if f in _SUBSELECT_AGGS or f in registry:
-                raise CQError(f"{desc} cannot contain aggregates")
+
+def _from_relations(from_node, registry: AggRegistry) -> list[str]:
+    """Relation names read by a CQ's FROM, after validating each
+    sub-SELECT in it."""
+    rels, found = [], set()
+    for kind, node in _plans(from_node):
+        if (rel := _relation_name(kind, node)) is not None:
+            rels.append(rel)
+        elif kind not in _FROM_KINDS:   # a node of a sub-SELECT
+            found.add(kind)
+            if kind == "Aggregate" and node.groupingExpressions().size():
+                found.add("GROUP BY")
+    if found:
+        if any(k == "UnresolvedFunction" and (
+                _fname(e) in _SUBSELECT_AGGS or _fname(e) in registry)
+               for k, e in _expressions(from_node)):
+            found.add("aggregates")
+        for kind, what in _SUBSELECT_CLAUSES.items():
+            if kind in found:
+                raise CQError(f"subqueries in continuous views cannot "
+                              f"contain {what}")
+    return rels
+
+
+def _from_span(node) -> tuple[int, int]:
+    """``[start, stop)`` of a FROM item.  Spark dates a join from its
+    JOIN keyword (a comma join from FROM), so a join starts where its
+    left side does."""
+    lo, hi = _span(node)
+    if node.nodeName() == "Join":
+        lo = _from_span(node.left())[0]
+    return lo, hi
+
+
+# ---------------------------------------------------------------------------
+# GROUP BY
+# ---------------------------------------------------------------------------
+
+def _group_by(text: str, groups: list) -> tuple[list[str],
+                                                list[list[str]] | None]:
+    """(GROUP BY expression texts, grouping sets or None): Spark
+    expands CUBE and ROLLUP to their sets."""
+    if not any(g.nodeName() in ("GroupingSets", "Cube", "Rollup")
+               for g in groups):
+        return [_text(text, g) for g in groups], None
+    if len(groups) != 1:
+        raise CQError("GROUPING SETS, CUBE and ROLLUP can't be mixed "
+                      "with other GROUP BY items")
+    sets = [[_text(text, e) for e in _seq(s)]
+            for s in _seq(groups[0].selectedGroupByExprs())]
+    return list(dict.fromkeys(e for s in sets for e in s)), sets
 
 
 # ---------------------------------------------------------------------------
 # Main entry
 # ---------------------------------------------------------------------------
 
-_DATEPART_BARE = re.compile(
-    r"(?i)\b(year|month|day|hour|minute|second)(\s*\()")
+_DATEPARTS = {"year", "month", "day", "hour", "minute", "second"}
 
 
-def rewrite_datepart_truncs(sql: str) -> str:
-    """Reference parity for bare datepart calls INSIDE CQ SQL:
-    PipelineDB registers ``year()/month()/day()/hour()/minute()/
-    second()`` as timestamp TRUNCATION functions
-    (pipelinedb--1.0.0.sql:2590-2618, src/miscutils.c:562-618), while
-    Spark's builtins of the same names EXTRACT an integer field.  A CQ
-    written for the reference means truncation, so bare calls rewrite
-    to the registered ``*_trunc`` equivalents — CQ SQL only; the
-    ad-hoc ``ctx.sql()`` surface keeps Spark semantics (use
-    ``extract(minute FROM ts)`` / ``date_part`` in a CQ for the
-    extraction meaning).  String/quoted regions are skipped."""
-    # _scan only yields positions OUTSIDE string/quoted regions
-    outside = {i for i, _c, _d in _scan(sql)}
-    out, last = [], 0
-    for m in _DATEPART_BARE.finditer(sql):
-        if m.start() not in outside:
-            continue  # inside a string literal / quoted identifier
-        out.append(sql[last:m.start()])
-        out.append(m.group(1).lower() + "_trunc" + m.group(2))
-        last = m.end()
-    out.append(sql[last:])
-    return "".join(out)
+def _create_edits(text: str, tree, exprs: list,
+                  truncs: bool) -> list[tuple[int, int, str]]:
+    """CREATE-time edits: ``output_of('cv')`` reads ``cv_osrel``
+    (reference src/analyzer.c:776-828); with ``truncs``, bare
+    ``year()``…``second()`` become the ``*_trunc`` TRUNCATION functions
+    PipelineDB registers under those names (pipelinedb--1.0.0.sql:
+    2590-2618) where Spark's builtins EXTRACT a field.  ``ctx.sql()``
+    keeps Spark's meaning; a CQ extracts with ``extract``/``date_part``."""
+    edits = []
+    for kind, node in _plans(tree):
+        if kind == "UnresolvedTableValuedFunction" and (
+                cv := _output_of(node)) is not None:
+            lo = _span(node)[0]
+            hi = text.index(")", _span(node.functionArgs().apply(0))[1])
+            edits.append((lo, hi + 1, f"{cv}_osrel"))
+    for kind, e in exprs if truncs else []:
+        if kind == "UnresolvedFunction" and (f := _fname(e)) in _DATEPARTS:
+            lo = _span(e)[0]
+            if text[lo:lo + len(f)].lower() == f:
+                edits.append((lo, lo + len(f), f + "_trunc"))
+    return edits
 
 
-def analyze(sql: str, stream_names: set[str], registry: AggRegistry = REGISTRY,
-            sw: str | None = None, step_factor: float = 5.0) -> CQPlan:
-    # PostgreSQL composite field access over change rows — `(delta).n`,
-    # `(new).x`, `(old).x` (reference delta_streams.sql) — normalizes
-    # to Spark struct access `delta.n`
-    sql = re.sub(r"\(\s*(old|new|delta)\s*\)\s*\.", r"\1.", sql)
-    clauses = split_clauses(sql)
-    if "SELECT" not in clauses or "FROM" not in clauses:
-        raise CQError("continuous queries must be SELECT ... FROM ...")
-    if "HAVING" in clauses:
+def analyze(sql: str, stream_names, parse: Callable,
+            registry: AggRegistry = REGISTRY, sw: str | None = None,
+            step_factor: float = 5.0, truncs: bool = False,
+            rewrite: Callable | None = None) -> CQPlan:
+    """The CQ ``sql`` over one of ``stream_names`` as a :class:`CQPlan`,
+    read from the tree ``parse`` (the engine's SQL reader) returns.
+    ``truncs`` applies the datepart rewrite (CREATE only: replay keeps
+    a stored statement as stored); ``rewrite(tree, exprs)`` returns
+    further ``(start, stop, new)`` edits.  The text parses once,
+    and again only when an edit changed it."""
+    text, distinct_on = pg_spellings(sql)
+    tree = _parse_cq(parse, sql, text)
+    exprs = _expressions(tree)
+    edits = _create_edits(text, tree, exprs, truncs) + (
+        rewrite(tree, exprs) if rewrite else [])
+    if edits:
+        sql = _splice(sql, edits)
+        text, distinct_on = pg_spellings(sql)
+        tree = _parse_cq(parse, sql, text)
+        exprs = _expressions(tree)
+
+    # the clause chain above the SELECT
+    node, limit, offset, chain = tree, None, None, set()
+    while (kind := node.nodeName()) in ("GlobalLimit", "LocalLimit",
+                                        "Offset", "Distinct", "Sort",
+                                        "UnresolvedHaving",
+                                        "UnresolvedWith"):
+        chain.add(kind)
+        if kind == "GlobalLimit":
+            limit = int(node.limitExpr().value())
+        elif kind == "Offset":
+            offset = int(node.offsetExpr().value())
+        node = node.child()
+    distinct = "Distinct" in chain
+    if "UnresolvedHaving" in chain:
         raise CQError("continuous queries don't support HAVING clauses; "
                       "use a WHERE clause on the continuous view instead")
-    if "ORDER BY" in clauses:
+    if "Sort" in chain:
         raise CQError("continuous queries don't support ORDER BY")
-    if re.match(r"(?i)^\s*WITH\b", sql.strip()):
+    if "UnresolvedWith" in chain:
         raise CQError("continuous queries don't support CTEs")
-    if re.search(r"(?i)\bOVER\s*\(", sql):
+    if any(k in ("WindowExpression", "UnresolvedWindowExpression")
+           for k, _ in exprs):
         raise CQError("continuous queries don't support window functions")
+    if kind == "Aggregate":
+        items, groups = (_seq(node.aggregateExpressions()),
+                         _seq(node.groupingExpressions()))
+    elif kind == "Project":
+        items, groups = _seq(node.projectList()), []
+    else:
+        raise CQError("continuous queries must be SELECT ... FROM ...")
+    node = node.child()
+    cond = None
+    if node.nodeName() == "Filter":
+        cond, node = node.condition(), node.child()
+    if node.nodeName() == "OneRowRelation":
+        raise CQError("continuous queries must be SELECT ... FROM ...")
 
-    select_text = clauses["SELECT"]
-    distinct = False
-    distinct_on: list[str] | None = None
-    m_don = re.match(r"(?i)^DISTINCT\s+ON\s*\(", select_text)
-    if m_don:
-        close = select_text.find(")", m_don.end())
-        depth = 1
-        i = m_don.end()
-        while i < len(select_text):
-            if select_text[i] == "(":
-                depth += 1
-            elif select_text[i] == ")":
-                depth -= 1
-                if depth == 0:
-                    close = i
-                    break
-            i += 1
-        distinct_on = split_top_level(select_text[m_don.end():close])
-        select_text = select_text[close + 1:].strip()
-        distinct = True
-    elif re.match(r"(?i)^DISTINCT\b", select_text):
-        distinct = True
-        select_text = re.sub(r"(?i)^DISTINCT\s+", "", select_text)
-    if re.search(r"(^|[\s,(])\*\s*(,|$)", select_text.strip()) and select_text.strip() == "*":
-        raise CQError("can't select \"*\" in continuous queries")
+    # select items + aliases
+    raw_items: list[tuple[str, str | None, object, tuple]] = []
+    for item in items:
+        kind = item.nodeName()
+        alias = item.name() if kind == "Alias" else None
+        if kind in ("Alias", "UnresolvedAlias"):
+            item = item.child()
+            kind = item.nodeName()
+        if kind == "UnresolvedStar":
+            raise CQError("can't select \"*\" in continuous queries")
+        lo, hi = _extent(item, kind)
+        expr = text[lo:hi]
+        if alias is None and expr.isidentifier():
+            alias = expr
+        if alias and alias.lower() in _RESERVED_COLS \
+                and expr.lower() != alias.lower():
+            # renaming an output to an internal/reserved name corrupts
+            # the matrel (reference: 'arrival_timestamp is a reserved
+            # column name', create_cont_view.out:694)
+            raise CQError(f"{alias} is a reserved column name")
+        raw_items.append((expr, alias, item, (lo, hi)))
 
-    from_clause = clauses["FROM"]
-    _validate_subselects(from_clause, registry)
-    # identify relations named in FROM (stream + tables)
-    rel_tokens = re.findall(r"[A-Za-z_][\w.]*", from_clause)
-    streams_in_from = [t for t in rel_tokens if t in stream_names]
-    uniq_streams = list(dict.fromkeys(streams_in_from))
-    if len(uniq_streams) == 0:
+    rels = _from_relations(node, registry)
+    streams = list(dict.fromkeys(
+        s for r in rels if (s := _named(stream_names, r)) is not None))
+    if len(streams) == 0:
         raise CQError("continuous queries must include a stream in the FROM clause")
-    if len(uniq_streams) > 1:
+    if len(streams) > 1:
         raise CQError("continuous queries don't support stream-to-stream JOINs")
-    stream = uniq_streams[0]
+    stream = streams[0]
+    lo, hi = _from_span(node)
+    from_clause = text[lo:hi]
 
-    where = clauses.get("WHERE")
-    sw_col, sw_secs, where = detect_sliding_window(where)
+    sw_col, sw_secs, where = (_sliding_window(text, cond) if cond
+                              else (None, None, None))
     if sw:  # WITH (sw='X') storage option (reference analyzer.c:1771-)
         if sw_col:
             raise CQError("sw option conflicts with sliding-window WHERE predicate")
         sw_col, sw_secs = "arrival_timestamp", parse_interval(sw)
 
-    limit = None
-    if "LIMIT" in clauses:
-        limit = int(clauses["LIMIT"].split()[0])
-    offset = None
-    if "OFFSET" in clauses:
-        offset = int(clauses["OFFSET"].split()[0])
-
-    # select items + aliases
-    items = split_top_level(select_text)
-    used: set[str] = set()
-    parsed_items: list[tuple[str, str]] = []
-    all_aggs: list[AggCall] = []
-    raw_items: list[tuple[str, str]] = []
-    for idx, item in enumerate(items):
-        m = re.search(r"(?i)\s+AS\s+(" + _IDENT_RE.pattern + r"|\"[^\"]+\")\s*$", item)
-        if m:
-            alias = m.group(1).strip('"')
-            body = item[: m.start()].strip()
-        else:
-            body = item.strip()
-            alias = body if _IDENT_RE.fullmatch(body) else None
-        if alias and alias.lower() in _RESERVED_COLS \
-                and body.lower() != alias.lower():
-            # renaming an output to an internal/reserved name corrupts
-            # the matrel (reference: 'arrival_timestamp is a reserved
-            # column name', create_cont_view.out:694)
-            raise CQError(f"{alias} is a reserved column name")
-        raw_items.append((body, alias))
-
-    group_exprs = []
-    grouping_sets: list[list[str]] | None = None
-    if "GROUP BY" in clauses:
-        gb_text = clauses["GROUP BY"].strip()
-        m_gs = re.match(r"(?i)^(GROUPING\s+SETS|CUBE|ROLLUP)\s*\((.*)\)\s*$",
-                        gb_text, re.S)
-        if m_gs:
-            kind = re.sub(r"\s+", " ", m_gs.group(1).upper())
-            inner = m_gs.group(2)
-            if kind == "GROUPING SETS":
-                grouping_sets = []
-                for part in split_top_level(inner):
-                    part = part.strip()
-                    if part.startswith("(") and part.endswith(")"):
-                        part = part[1:-1]
-                    grouping_sets.append(
-                        [p for p in split_top_level(part) if p] if part.strip()
-                        else [])
-            else:
-                base = split_top_level(inner)
-                if kind == "CUBE":
-                    from itertools import combinations
-                    grouping_sets = [list(c) for r in range(len(base), -1, -1)
-                                     for c in combinations(base, r)]
-                else:  # ROLLUP
-                    grouping_sets = [base[:i] for i in range(len(base), -1, -1)]
-            seen_g: list[str] = []
-            for gset in grouping_sets:
-                for g in gset:
-                    if g not in seen_g:
-                        seen_g.append(g)
-            group_exprs = seen_g
-        else:
-            group_exprs = split_top_level(gb_text)
-
+    group_exprs, grouping_sets = _group_by(text, groups)
     if distinct:
         if group_exprs:
             raise CQError("SELECT DISTINCT with GROUP BY is not supported")
-        group_exprs = [b for b, _ in raw_items]
+        group_exprs = [b for b, *_ in raw_items]
 
     # resolve GROUP BY ordinals / aliases to expressions
     def resolve_g(g: str) -> str:
         if g.isdigit():
             return raw_items[int(g) - 1][0]
-        hit = next((b for b, a in raw_items if a == g and b != g), None)
+        hit = next((b for b, a, *_ in raw_items if a == g and b != g), None)
         return hit if hit is not None else g
 
     group_exprs = [resolve_g(g) for g in group_exprs]
@@ -624,9 +692,9 @@ def analyze(sql: str, stream_names: set[str], registry: AggRegistry = REGISTRY,
 
     # hoist aggregates from each select item (two passes: the append-CV
     # decision needs to know whether ANY item aggregates)
-    extracted = [(body, alias) + extract_aggs(body, registry, used,
-                                              alias_hint=alias)
-                 for body, alias in raw_items]
+    used: set[str] = set()
+    extracted = [(b, a) + _hoist(text, body, extent, registry, used, a)
+                 for b, a, body, extent in raw_items]
     append = (not any(calls for *_, calls in extracted)
               and not group_exprs and not distinct
               and grouping_sets is None)
@@ -635,19 +703,20 @@ def analyze(sql: str, stream_names: set[str], registry: AggRegistry = REGISTRY,
         # materializes (reference create_cont_view.sql cqcreate0-2).
         # All items become the matrel key; multiplicity rides a hidden
         # presence count, expanded back at read.
-        group_exprs = [b for b, _ in raw_items]
-    norm_group = {re.sub(r"\s+", "", g).lower() for g in group_exprs}
+        group_exprs = [b for b, *_ in raw_items]
+    norm_group = {_norm(g) for g in group_exprs}
+    parsed_items: list[tuple[str, str]] = []
+    all_aggs: list[AggCall] = []
     for body, alias, rewritten, calls in extracted:
         if calls:
             all_aggs.extend(calls)
             name = alias or calls[0].out
         else:
-            if (re.sub(r"\s+", "", body).lower() not in norm_group
-                    and not distinct):
+            if _norm(body) not in norm_group and not distinct:
                 raise CQError(
                     f"column {body!r} must appear in the GROUP BY clause or "
                     f"be used in an aggregate function")
-            name = alias or re.sub(r"\W+", "_", body).strip("_")
+            name = alias or _column_name(body)
         parsed_items.append((rewritten, name))
 
     # matrel names for group exprs: reuse select alias when the group
@@ -655,13 +724,10 @@ def analyze(sql: str, stream_names: set[str], registry: AggRegistry = REGISTRY,
     # (INTERNAL_COLNAME_PREFIX, reference src/analyzer.c:64).
     group_names = []
     for i, g in enumerate(group_exprs):
-        gnorm = re.sub(r"\s+", "", g).lower()
-        hit = None
-        for (body, alias), (rew, name) in zip(raw_items, parsed_items):
-            if re.sub(r"\s+", "", body).lower() == gnorm and "{" not in rew:
-                hit = name
-                break
-        if hit is None and _IDENT_RE.fullmatch(g.strip()) \
+        hit = next((name for (body, *_), (rew, name)
+                    in zip(raw_items, parsed_items)
+                    if _norm(body) == _norm(g) and "{" not in rew), None)
+        if hit is None and g.strip().isidentifier() \
                 and g.strip() not in used:
             # a bare-identifier group expr keeps its own name even
             # without a matching plain select item, so select
@@ -677,11 +743,6 @@ def analyze(sql: str, stream_names: set[str], registry: AggRegistry = REGISTRY,
             raise CQError("sliding windows require aggregation")
         step = max(1.0, sw_secs * step_factor / 100.0)
 
-    tables = [t for t in dict.fromkeys(rel_tokens)
-              if t not in stream_names and t.upper() not in
-              ("JOIN", "ON", "LEFT", "RIGHT", "INNER", "OUTER", "FULL",
-               "CROSS", "AS", "AND", "OR", "USING")]
-
     return CQPlan(
         select_items=parsed_items,
         aggs=all_aggs,
@@ -691,13 +752,13 @@ def analyze(sql: str, stream_names: set[str], registry: AggRegistry = REGISTRY,
         stream=stream,
         where=where,
         limit=limit,
-        distinct=distinct,
         sw_column=sw_col,
         sw_seconds=sw_secs,
         sw_step_seconds=step,
-        tables=tables,
         grouping_sets=grouping_sets,
         distinct_on=distinct_on,
         append=append,
         offset=offset,
+        bare_stream=node.nodeName() == "UnresolvedRelation",
+        sql=sql,
     )

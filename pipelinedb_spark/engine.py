@@ -39,7 +39,11 @@ from pyspark.sql import types as T
 from pipelinedb_spark.aggregates import (REGISTRY, AggRegistry, AggSpec,
                                          state_col)
 from pipelinedb_spark.functions.time import ts_epoch
-from pipelinedb_spark.analyzer import CQError, CQPlan, analyze
+from pipelinedb_spark.analyzer import (CQError, CQPlan, _combine_calls,
+                                      _create_edits, _expressions,
+                                      _named, _plans,
+                                      _relation_name, _seq, _span,
+                                      _splice, _text, analyze)
 from pipelinedb_spark.matrel import BUCKET_COL, MatrelStore
 from pipelinedb_spark.session import arrow_frame
 
@@ -835,12 +839,14 @@ class ContView:
     def _overlay_schema(self) -> T.StructType:
         return self.finalize(self._probe(), recombine=False).schema
 
-    def _state_schema(self) -> T.StructType:
-        """Schema of the matrel partial-state columns (the fields of
-        the osrel's hidden delta_states struct)."""
+    def _schemas(self) -> tuple[T.StructType, T.StructType]:
+        """(overlay row schema, partial-state schema: the fields of the
+        osrel's hidden delta_states struct), both from one probe."""
+        probe = self._probe()
         keys = set(self._group_cols) | {BUCKET_COL}
-        return T.StructType([f for f in self._probe().schema.fields
-                             if f.name not in keys])
+        return (self.finalize(probe, recombine=False).schema,
+                T.StructType([f for f in probe.schema.fields
+                              if f.name not in keys]))
 
     def key_cols(self) -> list[str]:
         """User-visible group columns of the overlay output."""
@@ -996,69 +1002,6 @@ class PreparedInsert:
             self.ctx._prepared.remove(self)
 
 
-def _named(names: dict, rel: str) -> str | None:
-    """The one of ``names`` that relation ``rel`` denotes, matched
-    case-insensitively as Spark resolves identifiers."""
-    if rel in names:
-        return rel
-    return next((n for n in names if n.lower() == rel.lower()), None)
-
-
-def _seq(s) -> list:
-    """A Scala ``Seq`` as a Python list."""
-    return [s.apply(i) for i in range(s.size())]
-
-
-def _plans(plan):
-    """``(name, node)`` of each plan node of a parsed statement, CTE
-    bodies, subqueries (inner children) and an EXPLAIN's plan too."""
-    stack = [plan]
-    while stack:
-        node = stack.pop()
-        kind = node.nodeName()
-        yield kind, node
-        stack += _seq(node.children()) + _seq(node.innerChildren()) + (
-            [node.logicalPlan()] if kind == "ExplainCommand" else [])
-
-
-def _relation_name(kind: str, node) -> str | None:
-    """The single-part name a relation node reads, else None."""
-    if kind in ("UnresolvedRelation", "UnresolvedTableOrView"):
-        ident = _seq(node.multipartIdentifier())
-        return ident[0] if len(ident) == 1 else None
-
-
-def _combine_calls(exprs: list) -> list:
-    """combine()/sw_combine() calls in parsed expressions, in order."""
-    calls, stack = [], list(exprs)
-    while stack:
-        e = stack.pop()
-        if (e.nodeName() == "UnresolvedFunction" and
-                e.nameParts().last().lower() in ("combine", "sw_combine")):
-            calls.append(e)
-        else:
-            stack += _seq(e.children())
-    return sorted(calls, key=lambda c: _span(c)[0])
-
-
-def _span(node) -> tuple[int, int]:
-    """``[start, stop)`` of a parsed node in its statement's text."""
-    o = node.origin()
-    return o.startIndex().get(), o.stopIndex().get() + 1
-
-
-def _text(text: str, node, subs: dict | None = None) -> str:
-    """The text of a parsed expression, each combine() call in it
-    replaced by ``subs``' text for its argument."""
-    lo, hi = _span(node)
-    out = text[lo:hi]
-    for call in reversed(_combine_calls([node]) if subs else []):
-        s, e = _span(call)
-        arg = call.arguments().apply(0).nameParts().apply(0)
-        out = out[:s - lo] + subs[arg] + out[e - lo:]
-    return out
-
-
 class PipelineContext:
     """Top-level engine handle — one per SparkSession + state directory."""
 
@@ -1068,6 +1011,9 @@ class PipelineContext:
                  track_output_streams: bool = False,
                  commit_interval_batches: int = 1) -> None:
         self.spark = spark
+        # close() deletes only a root made here: a caller's root is
+        # state a fresh context reopens
+        self._own_root = root is None
         self.root = root or tempfile.mkdtemp(prefix="pipelinedb_spark_")
         self.matrel_root = os.path.join(self.root, "matrels")
         os.makedirs(self.matrel_root, exist_ok=True)
@@ -1282,18 +1228,13 @@ class PipelineContext:
                     ttl_column: str | None = None,
                     pk: str | None = None) -> ContView:
         self._check_new_name(name)
-        sql = self._rewrite_output_of(sql)
-        if not self._replaying:
-            # bare year()/minute()/... are TRUNCATION in CQ SQL
-            # (reference parity, sql:2590-2618).  Applied at CREATE
-            # only — the catalog stores the rewritten form, so a
-            # pre-rewrite catalog (whose bare names meant Spark
-            # extracts against an int-keyed matrel) replays verbatim
-            from pipelinedb_spark.analyzer import rewrite_datepart_truncs
-            sql = rewrite_datepart_truncs(sql)
-        sql = self._rewrite_delta_combines(sql)
-        plan = analyze(sql, set(self.streams), self.registry,
-                       sw=sw, step_factor=step_factor)
+        # bare year()/minute()/... truncate at CREATE only: the catalog
+        # stores the rewritten form, so an older catalog replays verbatim
+        plan = analyze(sql, set(self.streams), self._parse, self.registry,
+                       sw=sw, step_factor=step_factor,
+                       truncs=not self._replaying,
+                       rewrite=self._delta_combine_edits)
+        sql = plan.sql
         ttl_secs = None
         if ttl is not None:
             from pipelinedb_spark.analyzer import parse_interval
@@ -1308,14 +1249,16 @@ class PipelineContext:
         # exist"; pipeline_query.c:1989-1992).  Skipped when the source
         # schema is still unknown (an osrel whose owner couldn't be
         # resolved eagerly) — then resolution stays lazy as before.
+        # The same probe gives the output stream its schema.
+        schemas = None
         if self.streams[plan.stream].schema.fields:
             try:
-                cv._overlay_schema()
+                schemas = cv._schemas()
             except Exception as exc:
                 raise CQError(f"invalid continuous query: {exc}") from exc
         self.views[name] = cv
         self.streams[plan.stream].readers.append(name)
-        self._register_osrel(name)
+        self._register_osrel(name, schemas)
         self._catalog_add({"kind": "view", "name": name, "sql": sql,
                            "opts": {"sw": sw, "step_factor": step_factor,
                                     "ttl": ttl, "ttl_column": ttl_column,
@@ -1375,13 +1318,13 @@ class PipelineContext:
         batch of the one stream among the relations of its parse tree
         (``output_of('cv')`` reads the CV's output stream)."""
         self._check_new_name(name)
-        sql = self._rewrite_output_of(sql)
-        if not self._replaying:
-            # bare datepart truncation, CREATE-time only (see
-            # create_view) — replayed catalogs keep their stored form
-            from pipelinedb_spark.analyzer import rewrite_datepart_truncs
-            sql = rewrite_datepart_truncs(sql)
-        streams = {s for r in self._relations(self._parse(sql))
+        tree = self._parse(sql)
+        # output_of() and, at CREATE only, bare datepart truncation
+        # (see create_view): replayed catalogs keep their stored form
+        sql = _splice(sql, _create_edits(
+            sql, tree, [] if self._replaying else _expressions(tree),
+            truncs=not self._replaying))
+        streams = {s for r in self._relations(tree)
                    if (s := _named(self.streams, r)) is not None}
         if len(streams) != 1:
             raise CQError("transform must read exactly one stream, not "
@@ -1477,7 +1420,8 @@ class PipelineContext:
             if not self._replaying:
                 self._catalog_flush()
 
-    def _osrel_create_schema(self, name: str) -> T.StructType:
+    def _osrel_create_schema(self, name: str, schemas: tuple | None = None
+                             ) -> T.StructType:
         """Resolve a CQ's output-stream schema at CREATE time so a later
         ``CREATE ... FROM output_of('name')`` validates against real
         columns instead of an empty struct (reference materializes the
@@ -1485,12 +1429,13 @@ class PipelineContext:
         old/new/delta composite of the CV's row type).  The CQ's query
         was validated at CREATE, so failures here are unexpected —
         logged and fallen back to the lazy empty schema rather than
-        silently swallowed."""
+        silently swallowed.  ``schemas``: a view's (row, state) schemas
+        when its CREATE already probed them."""
         from pyspark.errors import AnalysisException
         try:
             if name in self.views:
                 cv = self.views[name]
-                row = cv._overlay_schema()
+                row, states = schemas or cv._schemas()
                 st = T.StructType([T.StructField(f.name, f.dataType, True)
                                    for f in row.fields])
                 if cv.plan.sw_column is not None:
@@ -1504,8 +1449,7 @@ class PipelineContext:
                           for c in ("old", "new", "delta")]
                 # non-SW change rows also carry the delta's raw
                 # partial states for downstream combine((delta).x)
-                fields.append(T.StructField(
-                    "delta_states", cv._state_schema(), True))
+                fields.append(T.StructField("delta_states", states, True))
                 return T.StructType(fields)
             if name in self.transforms:
                 tr = self.transforms[name]
@@ -1521,22 +1465,18 @@ class PipelineContext:
                 "(falling back to lazy empty schema): %s", name, exc)
         return T.StructType()
 
-    def _register_osrel(self, name: str) -> None:
+    def _register_osrel(self, name: str, schemas: tuple | None = None
+                        ) -> None:
         osrel = f"{name}_osrel"
         if osrel not in self.streams:
             self.streams[osrel] = StreamDef(
-                name=osrel, schema=self._osrel_create_schema(name))
+                name=osrel, schema=self._osrel_create_schema(name, schemas))
         base = os.path.join(self.osrel_root, osrel)
         if os.path.isdir(base):
             # fresh context over an existing root: resume the sequence
             segs = [int(e[4:]) for e in os.listdir(base)
                     if e.startswith("seg_")]
             self._osrel_seq[osrel] = (max(segs) + 1) if segs else 0
-
-    def _rewrite_output_of(self, sql: str) -> str:
-        # FROM output_of('cv') → FROM cv_osrel (reference
-        # src/analyzer.c:776-828)
-        return re.sub(r"(?i)output_of\s*\(\s*'([^']+)'\s*\)", r"\1_osrel", sql)
 
     def _register_delta_combine(self, up: str, call) -> str:
         """Derive + register the aggregate behind a rewritten
@@ -1571,33 +1511,48 @@ class PipelineContext:
                 if spec.merge_with_args is not None else None)))
         return fname
 
-    def _rewrite_delta_combines(self, sql: str) -> str:
+    def _delta_combine_edits(self, tree, exprs: list) -> list:
         """CVs combining DELTA STREAMS (reference delta_streams.sql):
         ``combine((delta).col)`` over ``output_of('up')`` re-merges the
         upstream aggregate's partial states, which ride every change
         row in the hidden ``delta_states`` struct — finalized delta
         VALUES are not re-mergeable (avg of avgs is wrong), states are.
-        Rewrites each call to a derived registered aggregate over the
-        state fields; idempotent across catalog replay.  A qualified
+        Returns the edits that rewrite each call to a derived
+        registered aggregate over the state fields.  A qualified
         ``(alias.delta).col`` binds to the upstream of the relation its
-        parse tree aliases.  CQ text, which Spark's parser may reject or
-        misread (DISTINCT ON), is parsed only when it calls combine()."""
+        parse tree aliases.  A stored statement already rewritten
+        (catalog replay) re-registers each derived aggregate it calls."""
+        calls = []
+        for kind, e in exprs:
+            if kind != "UnresolvedFunction":
+                continue
+            f = e.nameParts().last().lower()
+            if f in ("combine", "sw_combine"):
+                calls.append(e)
+            elif f.startswith("__dcmb_"):
+                # replay: longest view name first, but only one with a
+                # matching column ('a_b_c' may be view 'a' column 'b_c')
+                tok = f[len("__dcmb_"):]
+                for v in sorted(self.views, key=len, reverse=True):
+                    cc = next((c for c in self.views[v].plan.aggs
+                               if f"{v}_{c.out}".lower() == tok), None)
+                    if cc is not None:
+                        self._register_delta_combine(v, cc)
+                        break
         alias_of: dict[str, str] = {}
-        exprs = []
-        if re.search(r"(?i)\bcombine\s*\(", sql):
-            for kind, node in _plans(self._parse(sql)):
-                exprs += _seq(node.expressions())
-                alias = None
-                if kind == "SubqueryAlias":
-                    alias, node = node.alias(), node.child()
-                    kind = node.nodeName()
-                rel = _relation_name(kind, node) or ""
-                if (rel.lower().endswith("_osrel") and (up := _named(
-                        self.views, rel[:-len("_osrel")])) is not None):
-                    alias_of[(alias or rel).lower()] = up
+        for kind, node in _plans(tree) if calls else ():
+            alias = None
+            if kind == "SubqueryAlias":
+                alias, node = node.alias(), node.child()
+                kind = node.nodeName()
+            rel = _relation_name(kind, node) or ""
+            if (rel.lower().endswith("_osrel") and (up := _named(
+                    self.views, rel[:-len("_osrel")])) is not None):
+                alias_of[(alias or rel).lower()] = up
         ups = sorted(set(alias_of.values()))
+        edits = []
         # no upstream: not an output-stream query; analyze errors
-        for call in reversed(_combine_calls(exprs) if ups else []):
+        for call in calls if ups else ():
             args = _seq(call.arguments())
             parts = (_seq(args[0].nameParts()) if len(args) == 1 and
                      args[0].nodeName() == "UnresolvedAttribute" else [])
@@ -1631,24 +1586,8 @@ class PipelineContext:
             fargs = ", ".join(f"{q}delta_states.{state_col(col, x)}" for x
                               in self.registry.get(agg.func).partial(agg.args))
             s, e = _span(call)
-            sql = f"{sql[:s]}{fname}({fargs}){sql[e:]}"
-        # replay of an already-rewritten catalog entry: re-register.
-        # Candidate view names longest-first, but only stop on a
-        # SUCCESSFUL registration — with ambiguous names (views 'a'
-        # and 'a_b', token 'a_b_c' meaning view 'a' col 'b_c') the
-        # longer prefix has no matching agg column and must fall
-        # through to the shorter candidate
-        for tok in set(re.findall(r"__dcmb_(\w+)\(", sql)):
-            for v in sorted(self.views, key=len, reverse=True):
-                if not tok.startswith(v.lower() + "_"):
-                    continue
-                colname = tok[len(v) + 1:]
-                cc = next((c for c in self.views[v].plan.aggs
-                           if c.out.lower() == colname), None)
-                if cc is not None:
-                    self._register_delta_combine(v, cc)
-                    break
-        return sql
+            edits.append((s, e, f"{fname}({fargs})"))
+        return edits
 
     def drop_view(self, name: str, cascade: bool = False) -> None:
         """DROP VIEW [CASCADE]: dropping a CV whose output stream has
@@ -1750,11 +1689,11 @@ class PipelineContext:
             for call in cv.plan.aggs:
                 tok_old = f"__dcmb_{old}_{call.out}".lower()
                 tok_new = f"__dcmb_{new}_{call.out}".lower()
-                new_sql = re.sub(rf"(?i)\b{re.escape(tok_old)}\s*\(",
-                                 tok_new + "(", new_sql)
+                new_sql, n = re.subn(rf"(?i)\b{re.escape(tok_old)}\s*\(",
+                                     tok_new + "(", new_sql)
+                if n:
+                    self._register_delta_combine(new, call)
             reader.sql = new_sql
-            if "__dcmb_" in new_sql:
-                self._rewrite_delta_combines(new_sql)
             for rec in self._catalog:
                 if rec["kind"] in ("view", "transform") \
                         and rec["name"] == reader.name:
@@ -2104,8 +2043,8 @@ class PipelineContext:
 
     def _worker_input(self, plan: CQPlan, stream: str,
                       batch: DataFrame) -> DataFrame:
-        if re.fullmatch(r"[A-Za-z_][\w.]*", plan.from_clause.strip()):
-            return batch  # simple FROM stream
+        if plan.bare_stream:
+            return batch
         return _sql_over(batch, stream, f"SELECT * FROM {plan.from_clause}")
 
     def _write_osrel_segment(self, osrel: str,
@@ -2956,4 +2895,7 @@ class PipelineContext:
                 .orderBy("kind"))
 
     def close(self) -> None:
-        shutil.rmtree(self.root, ignore_errors=True)
+        """Release the context; a state root it created itself (no
+        ``root`` given) is deleted, a caller's root stays reopenable."""
+        if self._own_root:
+            shutil.rmtree(self.root, ignore_errors=True)

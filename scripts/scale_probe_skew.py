@@ -94,10 +94,8 @@ def run_variant(spark, variant: str, n_batches: int,
                 batch_rows: int) -> dict:
     from pipelinedb_spark import PipelineContext
     import pyspark.sql.functions as F
-    import tempfile
-    ctx = PipelineContext(
-        spark, root=tempfile.mkdtemp(prefix=f"pdb_skew_{variant}_"),
-        num_buckets=32)
+    # no root: the context makes one and close() deletes it
+    ctx = PipelineContext(spark, num_buckets=32)
     ctx.create_stream("st", "k string, v double, vm long")
     ctx.create_view(
         "cv_list",

@@ -192,8 +192,7 @@ def main() -> None:
         if not restarted and now_m - t0 >= restart_at:
             # full engine restart under the pins: stop ingest, drop
             # the context, replay definitions + state from the
-            # catalog (ctx.close() is a rmtree teardown helper, not
-            # a shutdown — a restart must NOT call it)
+            # catalog (a fresh context over the same root)
             att.stop()
             ctx = open_ctx()
             assert _rows(ctx.read_view_pinned("cv_swt", "run-sw")) \

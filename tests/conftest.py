@@ -1,4 +1,5 @@
 import os
+import shutil
 import sys
 
 import pytest
@@ -23,7 +24,8 @@ def ctx(spark, tmp_path):
 
     c = PipelineContext(spark, root=str(tmp_path / "pdb"), num_buckets=8)
     yield c
-    c.close()
+    c.close()   # keeps a caller's root: remove it here
+    shutil.rmtree(c.root, ignore_errors=True)
 
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")

@@ -124,6 +124,13 @@ def test_delta_combine_replay_with_ambiguous_view_names(spark, tmp_path):
     ctx2.close()
 
 
+def _delta_rewrite(ctx, sql):
+    """``sql`` with its delta combines rewritten, as CREATE does."""
+    from pipelinedb_spark.analyzer import _expressions, _splice
+    tree = ctx._parse(sql)
+    return _splice(sql, ctx._delta_combine_edits(tree, _expressions(tree)))
+
+
 def test_delta_combine_qualifier_binds_right_upstream(ctx):
     """With several osrel relations in scope, a qualified
     (alias.delta).col must bind to the alias's own upstream, and an
@@ -135,11 +142,11 @@ def test_delta_combine_qualifier_binds_right_upstream(ctx):
     ctx.create_view("up_mq2", "SELECT k, count(*) AS m FROM mq GROUP BY k")
     sql = ("SELECT combine((o2.delta).m) AS m FROM up_mq1_osrel o1 "
            "JOIN up_mq2_osrel o2 ON (o1.new).k = (o2.new).k")
-    out = ctx._rewrite_delta_combines(sql)
+    out = _delta_rewrite(ctx, sql)
     assert "__dcmb_up_mq2_m" in out and "__dcmb_up_mq1_m" not in out
     with pytest.raises(CQError, match="ambiguous"):
-        ctx._rewrite_delta_combines(
-            "SELECT combine((delta).m) AS m FROM up_mq1_osrel o1 "
+        _delta_rewrite(
+            ctx, "SELECT combine((delta).m) AS m FROM up_mq1_osrel o1 "
             "JOIN up_mq2_osrel o2 ON (o1.new).k = (o2.new).k")
 
 
@@ -630,7 +637,7 @@ def test_rename_view_does_not_corrupt_sibling_dcmb_tokens(ctx):
     sql = ("SELECT combine((o1.delta).x) AS x, combine((o2.delta).n) "
            "AS n FROM ra_osrel o1 JOIN ra_b_osrel o2 "
            "ON (o1.new).k = (o2.new).k")
-    rewritten = ctx._rewrite_delta_combines(sql)
+    rewritten = _delta_rewrite(ctx, sql)
     assert "__dcmb_ra_x" in rewritten and "__dcmb_ra_b_n" in rewritten
     # simulate the rename rewrite over the stored reader SQL
     import re as _re
